@@ -1332,65 +1332,10 @@ def kmeans_codebook_train(
     if iters < 1:
         raise ValueError("iters must be >= 1")
 
-    # ONE seeding pass: per-partition (min, max) partials AND the seed
-    # slice (vec_id < n_centroids) ride out of the same corpus scan —
-    # fused because min/max is order-independent and the seed slice is a
-    # row filter, so splitting them into two jobs (round-6 shape) paid a
-    # second full scan for nothing.  ≤ one partial row per task.
-    def seeding(batches):
-        import numpy as np
-        import pandas as pd
-
-        mn_p = mx_p = None
-        sid: list[int] = []
-        svec: list[list[float]] = []
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            mat = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-            bmn, bmx = mat.min(axis=0), mat.max(axis=0)
-            mn_p = bmn if mn_p is None else np.minimum(mn_p, bmn)
-            mx_p = bmx if mx_p is None else np.maximum(mx_p, bmx)
-            ids = pdf["vec_id"].to_numpy().astype(np.int64)
-            m = ids < n_centroids
-            if m.any():
-                sid.extend(int(i) for i in ids[m])
-                svec.extend(v.tolist() for v in mat[m])
-        if mn_p is not None:
-            yield pd.DataFrame(
-                {
-                    "mn": [mn_p.tolist()],
-                    "mx": [mx_p.tolist()],
-                    "sid": [sid],
-                    "svec": [svec],
-                }
-            )
-
-    part_rows = (
-        embeddings.select("vec_id", "embedding")
-        .mapInPandas(
-            seeding,
-            "mn array<double>, mx array<double>, sid array<long>,"
-            " svec array<array<double>>",
-        )
-        .collect()
-    )
-    if not part_rows:
-        raise ValueError("no non-zero-norm seed vectors to initialize centroids")
-    mn = np.min(np.array([r["mn"] for r in part_rows], dtype=np.float64), axis=0)
-    mx = np.max(np.array([r["mx"] for r in part_rows], dtype=np.float64), axis=0)
-    seed_ids = np.array(
-        [i for r in part_rows for i in r["sid"]], dtype=np.int64
-    )
-    seed_mat = [v for r in part_rows for v in r["svec"]]
-    order = np.argsort(seed_ids)
-    cents = _np_quantize(
-        np.array(seed_mat, dtype=np.float64)
-        if len(seed_mat)
-        else np.zeros((0, DIM)),
-        mn, mx,
-    )[order]
-    cent_ids = seed_ids[order]
+    # ONE seeding pass: the quantizer's (min, max) AND the seed slice
+    # (vec_id < n_centroids) ride out of the same corpus scan
+    mn, mx, cent_ids, seed_vecs = _sq_minmax_seeds_np(embeddings, n_centroids)
+    cents = _np_quantize(seed_vecs, mn, mx)
     live = (cents * cents).sum(axis=1) > 0  # zero-norm seed: cosine undefined
     cent_ids, cents = cent_ids[live], cents[live]
     if len(cent_ids) == 0:
@@ -1609,15 +1554,14 @@ def ivf_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ids, counts, cents = kmeans_codebook_train(emb)
     norms = (cents * cents).sum(axis=1).astype(np.int64)
-    rows = [
-        (int(i), int(n), int(z)) for i, n, z in zip(ids, counts, norms)
-    ]
-    # ONE slice for the ≤|cells|-row result: the default createDataFrame
-    # splits it across defaultParallelism Python partitions, paying a
-    # worker spin-up per slice for 16 rows
-    return spark.createDataFrame(
-        spark.sparkContext.parallelize(rows, 1),
-        "cell_id long, n_members long, centroid_norm long",
+    # a SQL VALUES LocalRelation for the ≤|cells|-row result: no
+    # Python-RDD task at execution (see _store_cell_counts_from_footers)
+    vals = ", ".join(
+        f"({int(i)}, {int(n)}, {int(z)})" for i, n, z in zip(ids, counts, norms)
+    )
+    return spark.sql(
+        "SELECT CAST(col1 AS BIGINT) AS cell_id, CAST(col2 AS BIGINT) AS n_members,"
+        f" CAST(col3 AS BIGINT) AS centroid_norm FROM VALUES {vals}"
     )
 
 

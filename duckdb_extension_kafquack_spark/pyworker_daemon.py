@@ -1,0 +1,76 @@
+"""PySpark worker daemon for this engine's Python-worker tasks.
+
+Every Python-worker task runs ``pyspark.worker_util.setup_spark_files``,
+which calls :func:`importlib.invalidate_caches`.  On CPython < 3.13 that
+makes every cached :class:`zipimport.zipimporter` (one per imported
+pyspark subpackage) re-read its archive's whole central directory — the
+3.5 MB ``pyspark.zip`` once per importer, ~260 ms per task before the
+task's own code starts (4-core VM, CPython 3.11, Spark 4.1).  CPython
+3.13 no longer does this eagerly.
+
+This module patches ``zipimporter.invalidate_caches`` to re-read an
+archive only when its ``os.stat`` (mtime_ns, size, inode) changed since
+this process last read it, then runs :func:`pyspark.daemon.manager`, so
+every worker the daemon forks inherits the patch.  ``session.get_spark``
+selects it with the static ``spark.python.daemon.module`` conf.  It must
+stay light to import (the package root only; no operators), and the
+package must be importable by the executors' Python when the daemon
+starts — before any task ships ``--py-files``.
+
+Run by Spark as ``python -m duckdb_extension_kafquack_spark.pyworker_daemon``.
+"""
+
+from __future__ import annotations
+
+import os
+import sys
+import zipimport
+
+_STOCK_INVALIDATE = zipimport.zipimporter.invalidate_caches
+# archive path -> ((mtime_ns, size, inode), directory) as last read here
+_READ: dict[str, tuple[tuple[int, int, int], dict]] = {}
+
+
+def invalidate_caches(self) -> None:
+    """Stock ``zipimporter.invalidate_caches``, skipped while the archive
+    is unchanged since this process last read its directory."""
+    try:
+        st = os.stat(self.archive)
+        stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+    except OSError:
+        stamp = None
+    seen = _READ.get(self.archive)
+    if seen is not None and seen[0] == stamp:
+        self._files = seen[1]
+        zipimport._zip_directory_cache[self.archive] = seen[1]
+        return
+    # stat BEFORE the read: a rewrite racing the read leaves a stale
+    # stamp, which only costs one extra read next time
+    _STOCK_INVALIDATE(self)
+    if stamp is not None and self.archive in zipimport._zip_directory_cache:
+        _READ[self.archive] = (stamp, self._files)
+
+
+def install() -> None:
+    """Patch ``zipimporter.invalidate_caches`` on CPython < 3.13."""
+    if sys.version_info < (3, 13):
+        zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def main() -> None:
+    import importlib
+
+    from pyspark.daemon import manager
+
+    install()
+    # read each archive once here, so forked workers start with stamps
+    importlib.invalidate_caches()
+    manager()
+
+
+if __name__ == "__main__":
+    # run the importable module's copy, not this __main__ one, so workers
+    # can identify the patched function by its module name
+    from duckdb_extension_kafquack_spark import pyworker_daemon
+
+    pyworker_daemon.main()

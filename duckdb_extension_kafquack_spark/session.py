@@ -59,6 +59,13 @@ def get_spark(app_name: str = "kafquack-spark", *, shuffle_partitions: int | Non
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python-worker tasks fork from the engine's daemon, which stops
+        # each task re-reading pyspark.zip's directory (pyworker_daemon).
+        # Static conf: a bare session keeps the stock pyspark.daemon.
+        .config(
+            "spark.python.daemon.module",
+            "duckdb_extension_kafquack_spark.pyworker_daemon",
+        )
         # RocksDB state store (SURVEY §7.4): streaming state spills to
         # local disk instead of living on the JVM heap — session windows
         # and stateful dedup survive beyond toy state sizes.  Changelog

@@ -355,13 +355,15 @@ class KafquackSimpleStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"index": 0}
 
-    def read(self, start: dict) -> tuple[list[tuple], dict]:
+    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
         tbl = self._load()
         lo = start["index"]
         hi = len(tbl) if self.batch_rows is None else min(len(tbl), lo + self.batch_rows)
-        # a LIST, not a generator: Spark's prefetch cache copy.copy()s the
-        # returned iterable to serve replanning (datasource_internal.getCache)
-        return self._rows(lo, hi), {"index": hi}
+        # an ITERATOR (the prefetch cache next()s an empty batch at the
+        # topic's end) over a LIST, not a generator: the cache copy.copy()s
+        # it to serve replanning (datasource_internal.getCache), and a
+        # list iterator copies with its position
+        return iter(self._rows(lo, hi)), {"index": hi}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> list[tuple]:
         return self._rows(start["index"], end["index"])

@@ -188,6 +188,40 @@ class TestStreamRead:
         assert got.exceptAll(ref).count() == 0
         assert ref.exceptAll(got).count() == 0
 
+    def test_simple_reader_drains_past_the_end(self, spark):
+        """The simple_stream_reader=true opt-in through Spark.  The trigger
+        after the topic's end reads an empty batch with end == start, which
+        Spark's prefetch cache next()s; processAllAvailable waits for that
+        trigger, so the stream must survive it and hold every offset
+        exactly once."""
+        stream = read_kafquack(
+            spark,
+            "localhost:9092",
+            "events",
+            "g",
+            stream=True,
+            fixture_dir=SF_DIR,
+            max_offsets_per_trigger=400,
+            simple_stream_reader="true",
+        )
+        q = (
+            stream.writeStream.format("memory")
+            .queryName("kafquack_simple_t1")
+            .trigger(processingTime="100 milliseconds")
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            assert q.isActive and q.exception() is None
+        finally:
+            q.stop()
+        got = spark.table("kafquack_simple_t1")
+        ref = kafka_messages_from_events(spark, SF_DIR)
+        assert got.count() == ref.count()
+        assert got.exceptAll(ref).count() == 0
+        assert ref.exceptAll(got).count() == 0
+
     def test_micro_batches_bounded_by_max_offsets(self, spark):
         from duckdb_extension_kafquack_spark.sources.datasource import (
             KafquackSimpleStreamReader,
@@ -201,6 +235,7 @@ class TestStreamRead:
             }
         )
         rows, end = r.read(r.initialOffset())
+        rows = list(rows)
         assert len(rows) == 300
         assert end == {"index": 300}
         # deterministic re-read of the same batch (restart recovery)
@@ -219,9 +254,9 @@ class TestStreamRead:
             {"fixture_dir": SF_DIR, "topic": "events"}
         )
         rows, end = r.read(r.initialOffset())
-        assert end["index"] == len(rows)
+        assert end["index"] == len(list(rows))
         rows2, end2 = r.read(end)
-        assert rows2 == [] and end2 == end
+        assert list(rows2) == [] and end2 == end
 
 
 class TestParallelStreamReader:
