@@ -22,38 +22,9 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Fixed-dimension dot product as an unrolled ``+``-chain.
-
-    Bit-identical to :func:`dot` (and to DuckDB ``list_dot_product``):
-    the left-associated sum (x0+x1)+x2… accumulates in exactly the fold
-    order, and each element is cast to double before multiplying.  Unlike
-    the higher-order-function fold, a plain arithmetic chain stays inside
-    whole-stage codegen — ~10× faster in all-pairs loops."""
-    terms = [a[i].cast("double") * b[i].cast("double") for i in range(dim)]
-    out = terms[0]
-    for t in terms[1:]:
-        out = out + t
-    return out
-
-
 def l2_norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
 def cosine_similarity(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
-
-
-# DuckDB oracle equivalents (SQL text builders) ---------------------------
-
-def duck_dot(a: str, b: str) -> str:
-    return f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-
-
-def duck_cosine(a: str, b: str) -> str:
-    return (
-        f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[]) / "
-        f"(sqrt(list_dot_product({a}::DOUBLE[], {a}::DOUBLE[])) * "
-        f"sqrt(list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])))"
-    )

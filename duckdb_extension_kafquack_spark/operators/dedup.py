@@ -205,15 +205,6 @@ MAX_HOT_BUCKETS = 1_000_000
 SIMHASH_BITS = 60
 
 
-def _tokens(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, tok) pairs — the unigram relation."""
-    return (
-        docs.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
-        .filter(F.col("tok") != "")
-        .distinct()
-    )
-
-
 # word-3-gram shingles: unigram sets don't discriminate on small
 # vocabularies (every doc shares most words); 3-token windows capture
 # order and make the Jaccard distribution bimodal (verified on the
@@ -231,19 +222,6 @@ _DUCK_SHINGLES = (
     "list_transform(range(1, len(toks) - {mm}), i -> array_to_string(list_slice(toks, i, i + {m}), ' ')) "
     "ELSE [array_to_string(toks, ' ')] END"
 ).format(n=SHINGLE_WORDS, m=SHINGLE_WORDS - 1, mm=SHINGLE_WORDS - 2)
-
-
-def _word_shingles(docs: DataFrame) -> DataFrame:
-    """Distinct (doc_id, tok) where tok is a 3-word shingle — one
-    explode, all expression-level (codegen), no UDF."""
-    return (
-        docs.select(
-            "doc_id",
-            F.filter(F.split("text", " "), lambda t: t != "").alias("toks"),
-        )
-        .select("doc_id", F.explode(F.expr(_SPARK_SHINGLES)).alias("tok"))
-        .distinct()
-    )
 
 
 _DUCK_SHINGLE_CTE = f"""
@@ -581,36 +559,6 @@ def candidate_pairs(
         .select("p.doc1", "p.doc2")
         .filter(F.col("doc1") < F.col("doc2"))  # strict <: duplicate-id safety
         .distinct()
-    )
-
-
-def verified_jaccard(
-    pairs: DataFrame, toks: DataFrame, sizes: DataFrame | None = None
-) -> DataFrame:
-    """Exact token-set Jaccard for candidate pairs only (LSH keeps this
-    linear-ish): |A∩B| via a token-equijoin restricted to candidates,
-    |A∪B| = |A|+|B|-|A∩B|.  Pass precomputed ``sizes`` (doc_id, n) to
-    avoid an extra aggregation over the shingle relation."""
-    if sizes is None:
-        sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    t1 = toks.select(F.col("doc_id").alias("doc1"), "tok")
-    t2 = toks.select(F.col("doc_id").alias("doc2"), "tok")
-    inter = (
-        pairs.join(t1, "doc1")
-        .join(t2, ["doc2", "tok"])
-        .groupBy("doc1", "doc2")
-        .agg(F.count(F.lit(1)).alias("icnt"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("doc1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc2"), F.col("n").alias("n2"))
-    return (
-        inter.join(s1, "doc1")
-        .join(s2, "doc2")
-        .select(
-            "doc1",
-            "doc2",
-            (F.col("icnt") / (F.col("n1") + F.col("n2") - F.col("icnt"))).alias("jaccard"),
-        )
     )
 
 

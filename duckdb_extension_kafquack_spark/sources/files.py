@@ -49,19 +49,6 @@ def write_bucketed(
     )
 
 
-def stream_to_files(
-    df: DataFrame, path: str, checkpoint: str, fmt: str = "parquet"
-) -> "StreamingQuery":  # noqa: F821
-    """Exactly-once file sink (manifest-committed) for an unbounded query."""
-    return (
-        df.writeStream.format(fmt)
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def stream_fan_out(
     df: DataFrame,
     checkpoint: str,

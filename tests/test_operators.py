@@ -814,7 +814,7 @@ class TestInt8Quantization:
         from duckdb_extension_kafquack_spark.operators.similarity import (
             IVF_CENTROIDS,
             _np_quantize,
-            _sq_minmax_np,
+            _sq_minmax_seeds_np,
             kmeans_codebook_train,
         )
 
@@ -823,7 +823,7 @@ class TestInt8Quantization:
         assert set(ids) <= set(range(IVF_CENTROIDS))
         assert cents.min() >= 0 and cents.max() <= 255
         assert np.array_equal(cents, np.floor(cents))  # integer-valued
-        mn, mx = _sq_minmax_np(emb)
+        mn, mx = _sq_minmax_seeds_np(emb, IVF_CENTROIDS)[:2]
         rows = emb.select("embedding").collect()
         codes = _np_quantize(
             np.array([r["embedding"] for r in rows], dtype=np.float64), mn, mx
@@ -1790,5 +1790,13 @@ class TestEdgePartitions:
             _edge_partitions,
         )
 
-        mid = spark.range(10_000).repartition(7)
-        assert _edge_partitions(mid) == 7
+        # the cap is the session's shuffle width, which follows the CPU
+        # count: widen it past 7 so a value strictly between the floor
+        # and the cap exists on any host
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "16")
+        try:
+            mid = spark.range(10_000).repartition(7)
+            assert _edge_partitions(mid) == 7
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
