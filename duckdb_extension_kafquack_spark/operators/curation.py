@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import derived
 from ..functions.hashing import duck_hash64, spark_hash64
 from ..session import load_tables
 from ..suite import query
@@ -56,14 +57,13 @@ _SPARK_5GRAMS = (
 )
 
 
-#: LRU of persisted per-doc gram relations keyed by the input plan's
-#: semantic hash (r12 advice): each DISTINCT input plan (every
-#: replication factor in the scaling probe, every SF dir) used to pin a
+#: LRU bound on the persisted per-doc gram relations, memoized per input
+#: plan (r12 advice): each DISTINCT input plan (every replication
+#: factor in the scaling probe, every SF dir) used to pin a
 #: corpus-scaled cached relation for process lifetime.  Cap 2 bounds the
 #: pinned storage to at most two corpus-scaled relations; eviction
 #: unpersists eagerly (the evicted plan belongs to a finished query —
 #: queries run sequentially — so at worst a late consumer recomputes).
-_GRAMS_PERSIST_LRU: "dict[int, DataFrame]" = {}
 _GRAMS_PERSIST_CAP = 2
 
 
@@ -75,22 +75,16 @@ def _persisted_grams(docs: DataFrame) -> DataFrame:
 
     from .dedup import _repartition_if_narrow
 
-    key = docs._jdf.queryExecution().analyzed().semanticHash()
-    hit = _GRAMS_PERSIST_LRU.pop(key, None)
-    if hit is not None:
-        _GRAMS_PERSIST_LRU[key] = hit  # refresh recency
-        return hit
-    grams = (
-        _repartition_if_narrow(docs)
+    return derived.get_or_build(
+        "grams",
+        docs.sparkSession,
+        derived.plan_key(docs),
+        lambda: _repartition_if_narrow(docs)
         .selectExpr("doc_id", "source", f"{_SPARK_TOKS} AS toks")
         .selectExpr("source", "doc_id", f"{_SPARK_5GRAMS} AS gs")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .persist(StorageLevel.MEMORY_AND_DISK),
+        keep=_GRAMS_PERSIST_CAP,
     )
-    _GRAMS_PERSIST_LRU[key] = grams
-    while len(_GRAMS_PERSIST_LRU) > _GRAMS_PERSIST_CAP:
-        old = _GRAMS_PERSIST_LRU.pop(next(iter(_GRAMS_PERSIST_LRU)))
-        old.unpersist(blocking=False)
-    return grams
 
 
 def contamination_counts(docs: DataFrame) -> DataFrame:
@@ -1308,17 +1302,8 @@ FUZZY_BENCH_MOD = 7            # a LARGER held-out slice than exact
                                # trivially-green gate row proves nothing)
 
 
-# per-process registry of built fuzzy-benchmark index stores:
-# sf_dir -> (bands_table, sets_table).  Same contract as
-# dedup._INCR_STORES: the benchmark index is a scheduled, fixed-size
-# artifact (the benchmark suite changes when a new eval ships, not per
-# ingest) — steady-state decontamination batches only pay the stored
-# reads.
-_FUZZY_BENCH_STORES: dict[str, tuple[str, str]] = {}
-
-
 def ensure_fuzzy_bench_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build (at most once per process) the benchmark-side state the
+    """Build (at most once per context) the benchmark-side state the
     streaming fuzzy-decontamination gate probes (r11 verdict item 6):
 
     * the benchmark band signatures ``(bench_id, band_sig)`` BUCKETED on
@@ -1333,42 +1318,44 @@ def ensure_fuzzy_bench_store(spark: SparkSession, sf_dir: str) -> tuple[str, str
     (two single-key bucketed tables, joins keyed on exactly the bucket
     column); the benchmark side is fixed-size at 100 TB, so this store
     is small — bucketing it is about join planning stability, not
-    memory."""
+    memory.  Same memo contract as the incremental store: the benchmark
+    index is a scheduled, fixed-size artifact (the benchmark suite
+    changes when a new eval ships, not per ingest) — steady-state
+    decontamination batches only pay the stored reads."""
     import os
     import shutil
 
-    got = _FUZZY_BENCH_STORES.get(sf_dir)
-    if got is not None:
-        return got
     from ..sources.files import write_bucketed
     from .dedup import _incr_store_tag, minhash_bands, minhash_sig_sets
 
-    tag = _incr_store_tag(sf_dir)
-    bands_table = f"kafquack_fuzzy_bench_bands_{tag}"
-    sets_table = f"kafquack_fuzzy_bench_sets_{tag}"
-    warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    docs = load_tables(spark, sf_dir)["documents"]
-    bench = docs.filter(F.col("doc_id") % FUZZY_BENCH_MOD == 0)
-    bsig = minhash_sig_sets(bench)
-    bands = minhash_bands(bsig).select(
-        F.col("doc_id").alias("bench_id"), "band_sig"
-    )
-    sets_df = bsig.select(
-        F.col("doc_id").alias("bench_id"),
-        F.col("stoks").alias("t2"),
-        F.col("n").alias("n2"),
-    )
-    for tbl, df, key in (
-        (bands_table, bands, "band_sig"),
-        (sets_table, sets_df, "bench_id"),
-    ):
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        shutil.rmtree(os.path.join(warehouse, tbl.lower()), ignore_errors=True)
-        write_bucketed(df, tbl, key)
-    _FUZZY_BENCH_STORES[sf_dir] = (bands_table, sets_table)
-    return _FUZZY_BENCH_STORES[sf_dir]
+    def build():
+        tag = _incr_store_tag(sf_dir)
+        bands_table = f"kafquack_fuzzy_bench_bands_{tag}"
+        sets_table = f"kafquack_fuzzy_bench_sets_{tag}"
+        warehouse = spark.conf.get(
+            "spark.sql.warehouse.dir", "spark-warehouse"
+        ).removeprefix("file:")
+        docs = load_tables(spark, sf_dir)["documents"]
+        bench = docs.filter(F.col("doc_id") % FUZZY_BENCH_MOD == 0)
+        bsig = minhash_sig_sets(bench)
+        bands = minhash_bands(bsig).select(
+            F.col("doc_id").alias("bench_id"), "band_sig"
+        )
+        sets_df = bsig.select(
+            F.col("doc_id").alias("bench_id"),
+            F.col("stoks").alias("t2"),
+            F.col("n").alias("n2"),
+        )
+        for tbl, df, key in (
+            (bands_table, bands, "band_sig"),
+            (sets_table, sets_df, "bench_id"),
+        ):
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            shutil.rmtree(os.path.join(warehouse, tbl.lower()), ignore_errors=True)
+            write_bucketed(df, tbl, key)
+        return bands_table, sets_table
+
+    return derived.get_or_build("fuzzy_bench_store", spark, sf_dir, build)
 
 
 def fuzzy_contamination(docs: DataFrame) -> DataFrame:

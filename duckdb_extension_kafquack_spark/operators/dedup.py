@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import derived
 from ..functions.hashing import duck_hash64, duck_seeded_md5, spark_hash64
 from ..session import load_tables
 from ..suite import query
@@ -133,26 +134,21 @@ def ngram_knobs(n_docs: int) -> tuple[int, int, int]:
     return lsh_knobs(n_docs, NGRAM_HASHES // NGRAM_BANDS, NGRAM_BANDS)
 
 
-#: per-sf_dir memo of derived word-shingle banding knobs — the footer
-#: read is cheap, but the knobs must also be STABLE within a process so
-#: a store built early and a stream side built later can never disagree.
-_MINHASH_KNOBS_MEMO: dict[str, tuple[int, int, int]] = {}
-
-
-def minhash_knobs_for(sf_dir: str) -> tuple[int, int, int]:
+def minhash_knobs_for(spark: SparkSession, sf_dir: str) -> tuple[int, int, int]:
     """``(num_hashes, bands, rows_per_band)`` for ``sf_dir``'s corpus —
     the RUNTIME wiring of the corpus-derived banding law (r12 advice):
     :func:`minhash_knobs` over the parquet-footer rowcount, memoized
-    per sf_dir.  Every path of the incremental-dedup ingest family
-    (store build, stream side, inline corpus rels) derives its banding
-    from HERE, so the store and the arriving batch always band
+    per sf_dir (the footer read is cheap, but the knobs must be STABLE
+    within a context).  Every path of the incremental-dedup ingest
+    family (store build, stream side, inline corpus rels) derives its
+    banding from HERE, so the store and the arriving batch always band
     identically.  At every oracle-checked SF (and the 64× probe) this
     resolves to the floor constants — oracle mirrors are untouched —
     while a beyond-floor corpus gets the sharper S-curve."""
-    got = _MINHASH_KNOBS_MEMO.get(sf_dir)
-    if got is None:
-        got = _MINHASH_KNOBS_MEMO[sf_dir] = minhash_knobs(documents_rowcount(sf_dir))
-    return got
+    return derived.get_or_build(
+        "minhash_knobs", spark, sf_dir,
+        lambda: minhash_knobs(documents_rowcount(sf_dir)),
+    )
 
 
 def documents_rowcount(sf_dir: str) -> int:
@@ -413,12 +409,6 @@ def minhash_bands(
     )
 
 
-#: hot-bucket probe results per (semantic plan hash, cap) — see
-#: _with_bucket_sub's round-10 note.  Bounded: ≤ MAX_HOT_BUCKETS rows
-#: per distinct pipeline built in the session.
-_HOT_BUCKET_MEMO: dict[tuple[int, int], list] = {}
-
-
 def _with_bucket_sub(bands_df: DataFrame, max_bucket_size: int) -> DataFrame:
     """Append the bucket sub-split column: rows of a bucket larger than
     ``max_bucket_size`` are scattered into ``ceil(n / max)`` sub-groups
@@ -482,20 +472,14 @@ def _with_bucket_sub(bands_df: DataFrame, max_bucket_size: int) -> DataFrame:
             F.ceil(F.col("_bn") / F.lit(float(max_bucket_size))).alias("_nsub"),
         )
     )
-    memo_key = None
-    try:
-        memo_key = (
-            bands_df._jdf.queryExecution().analyzed().semanticHash(),
-            max_bucket_size,
-        )
-    except Exception:  # py4j surface drift — fall back to re-probing
-        pass
-    if memo_key is not None and memo_key in _HOT_BUCKET_MEMO:
-        hot_rows = _HOT_BUCKET_MEMO[memo_key]
-    else:
-        hot_rows = sizes.limit(MAX_HOT_BUCKETS + 1).collect()
-        if memo_key is not None:
-            _HOT_BUCKET_MEMO[memo_key] = hot_rows
+    # ≤ MAX_HOT_BUCKETS + 1 rows per distinct pipeline
+    plan = derived.plan_key(bands_df)
+    hot_rows = derived.get_or_build(
+        "hot_buckets",
+        bands_df.sparkSession,
+        None if plan is None else (plan, max_bucket_size),
+        lambda: sizes.limit(MAX_HOT_BUCKETS + 1).collect(),
+    )
     if not hot_rows:
         return bands_df.withColumn("sub", F.lit(0).cast("bigint"))
     if len(hot_rows) > MAX_HOT_BUCKETS:
@@ -672,22 +656,19 @@ def _persisted_verified_pairs(docs: DataFrame) -> DataFrame:
     )
 
 
-#: cross-query memo of the connected-components LABELS over the shared
-#: verified-pair relation, keyed (applicationId, docs-plan semanticHash).
-#: Four registered queries (dedup_clusters, dedup_cluster_histogram,
-#: dedup_canonical_corpus, dedup_keep_best_quality) cluster the SAME
-#: pair relation; unlike the pair persists — where CacheManager serves
-#: the plan transparently — the labels sit behind per-call
-#: ``localCheckpoint`` RDDs, so sharing them means memoizing the
-#: result-bearing frame on plan identity (the trained-codebook /
-#: hot-probe-memo pattern).  applicationId in the key pins entries to
-#: the SparkContext whose executors hold the checkpointed blocks; the
-#: semanticHash distinguishes corpora (sf dirs).  Staleness contract is
-#: the same as the persisted pair relations the labels derive from:
-#: the memo reflects the data as first materialized in this context.
-_VERIFIED_CC_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
+# The connected-components LABELS over the shared verified-pair
+# relation are memoized per docs plan (``derived`` kind "verified_cc").
+# Four registered queries (dedup_clusters, dedup_cluster_histogram,
+# dedup_canonical_corpus, dedup_keep_best_quality) cluster the SAME
+# pair relation; unlike the pair persists — where CacheManager serves
+# the plan transparently — the labels sit behind per-call
+# ``localCheckpoint`` RDDs, so sharing them means memoizing the
+# result-bearing frame on plan identity (the trained-codebook /
+# hot-probe-memo pattern).  The memo's context scope pins entries to
+# the SparkContext whose executors hold the checkpointed blocks; the
+# semanticHash distinguishes corpora (sf dirs).  Staleness contract is
+# the same as the persisted pair relations the labels derive from:
+# the memo reflects the data as first materialized in this context.
 def _verified_cc_labels(docs: DataFrame) -> DataFrame:
     """Connected components over :func:`_persisted_verified_pairs`,
     computed once per (context, corpus) and shared by the CC-consumer
@@ -695,24 +676,14 @@ def _verified_cc_labels(docs: DataFrame) -> DataFrame:
     component), so reuse is value-neutral — the four consumers' DuckDB
     oracles each re-prove it.  NOT a cross-run cache: a fresh process /
     fresh SparkContext recomputes from the parquet inputs."""
-    key = None
-    try:
-        key = (
-            docs.sparkSession.sparkContext.applicationId,
-            docs._jdf.queryExecution().analyzed().semanticHash(),
-        )
-    except Exception:  # py4j surface drift — fall back to recomputing
-        pass
-    if key is not None:
-        got = _VERIFIED_CC_MEMO.get(key)
-        if got is not None:
-            return got
-    comp = connected_components(
-        _persisted_verified_pairs(docs).select("doc1", "doc2")
+    return derived.get_or_build(
+        "verified_cc",
+        docs.sparkSession,
+        derived.plan_key(docs),
+        lambda: connected_components(
+            _persisted_verified_pairs(docs).select("doc1", "doc2")
+        ),
     )
-    if key is not None:
-        _VERIFIED_CC_MEMO[key] = comp
-    return comp
 
 
 def _duck_band_ctes() -> str:
@@ -2140,14 +2111,6 @@ def store_band_signatures(
     return table
 
 
-# per-process registry of built incremental-dedup corpus stores:
-# sf_dir -> (bands_table, sets_path, hash_path).  Same contract as
-# similarity._SERVE_STORES: the nightly store build is a separate,
-# scheduled cost — steady-state ingest batches should only ever pay the
-# stored-index reads.
-_INCR_STORES: dict[str, tuple[str, str, str]] = {}
-
-
 def _incr_store_tag(sf_dir: str) -> str:
     """Store-table name tag: basename + a hash of the FULL path — two
     fixture dirs sharing a basename must never share on-disk stores
@@ -2239,7 +2202,7 @@ def build_incremental_store(
     corpus = docs.filter(F.col("doc_id") % 2 == 0)
     # corpus-derived banding (r12 advice): floor constants at every
     # oracle-checked SF; sharper curve beyond — see minhash_knobs_for
-    nh, nb, nr = minhash_knobs_for(sf_dir)
+    nh, nb, nr = minhash_knobs_for(spark, sf_dir)
 
     nbk = incr_store_buckets(documents_rowcount(sf_dir) // 2)
 
@@ -2324,7 +2287,7 @@ def build_incremental_store(
 def ensure_incremental_store(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, str, str]:
-    """Build (at most once per process) the incremental-dedup corpus
+    """Build (at most once per context) the incremental-dedup corpus
     store (:func:`build_incremental_store`).  The nightly rebuild is a
     separate, scheduled cost — its own oracled row,
     :func:`incremental_dedup_store_build` — so steady-state ingest
@@ -2332,11 +2295,9 @@ def ensure_incremental_store(
     streaming_incremental_dedup_stored`) only ever pay the stored-index
     reads: the ann_int8_store_build / ann_int8_store_serve accounting
     split applied to the dedup ingest headline (r11 verdict item 1)."""
-    got = _INCR_STORES.get(sf_dir)
-    if got is not None:
-        return got
-    _INCR_STORES[sf_dir] = build_incremental_store(spark, sf_dir)
-    return _INCR_STORES[sf_dir]
+    return derived.get_or_build(
+        "incr_store", spark, sf_dir, lambda: build_incremental_store(spark, sf_dir)
+    )
 
 
 def _incr_store_footer_counts(
@@ -2441,7 +2402,7 @@ def incremental_dedup_store_build(spark: SparkSession, sf_dir: str) -> DataFrame
     parquet footers of the files just written.  The serve twin
     (:func:`..streaming.windows.streaming_incremental_dedup_stored`)
     measures the per-ingest classify alone against a store built at
-    most once per process; this row pays the rebuild every call, by
+    most once per context; this row pays the rebuild every call, by
     design.  Verification is two-layer: parquet-footer row counts
     prove the write landed page-free, and DISTINCT content-key counts
     (band signatures / md5 keys / shingled doc ids) prove the stored

@@ -11,7 +11,7 @@ shuffle, per-batch partial top-k (≤ k rows per query per batch) before
 the single row_number merge.  Callers differ only in the dot function,
 the optional cell pruning and the score column; the tiny query set /
 codebook / quantizer stats are driver-side closures, and the int8
-quantizer state has one memo (:data:`_SQ_STATS_CACHE`).  The LSH variant buckets
+quantizer state has one memo (:func:`_sq_minmax_seeds_np`).  The LSH variant buckets
 both sides by deterministic sign-random-projection bits so the join
 touches only same-bucket rows; at 100 TB bucket count scales with
 corpus size (more planes) while the plan shape is unchanged.
@@ -32,6 +32,7 @@ import hashlib
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import derived
 from ..functions.vectors import cosine_similarity
 from ..session import load_tables
 from ..suite import query
@@ -749,16 +750,6 @@ def _sq_minmax(embeddings: DataFrame) -> DataFrame:
     return embeddings.agg(*aggs)
 
 
-# The ONE int8 quantizer-state memo: (stats_cache_key, n_centroids) ->
-# (mn, mx, seed_ids, seed_vecs).  int8_topk, int8_ivf_topk and
-# store_quantized_codes all read it.  A key names an IMMUTABLE
-# embeddings input (the registered queries pass the fixture dir): a
-# serving tier pins exactly this state between query batches and
-# re-derives it only on index rebuild; a caller with a mutable input
-# passes no key.
-_SQ_STATS_CACHE: dict[tuple, tuple] = {}
-
-
 def _sq_minmax_seeds_np(
     embeddings: DataFrame, n_centroids: int, cache_key: str | None = None
 ):
@@ -770,16 +761,26 @@ def _sq_minmax_seeds_np(
     total ride along those ≤ n_partitions rows, so the driver transfer
     stays bounded by design constants.  min/max are order-independent
     and the seeds are re-sorted by id driver-side, so results do not
-    depend on how the corpus is partitioned.  ``cache_key`` memoizes the
-    result in :data:`_SQ_STATS_CACHE` under ``(cache_key,
-    n_centroids)``.  An empty corpus yields zero stats and no seeds:
+    depend on how the corpus is partitioned.
+
+    ``cache_key`` memoizes the result as the ONE int8 quantizer-state
+    memo, ``derived`` kind "sq_stats" under ``(cache_key, n_centroids)``;
+    int8_topk, int8_ivf_topk and store_quantized_codes all read it.  A
+    key names an IMMUTABLE embeddings input (the registered queries pass
+    the fixture dir): a serving tier pins exactly this state between
+    query batches and re-derives it only on index rebuild; a caller with
+    a mutable input passes no key.  An empty corpus yields zero stats and no seeds:
     every code quantizes to zero norm, so the int8 paths return empty
     results and the store builder writes an empty store."""
     import numpy as np
 
-    key = (cache_key, n_centroids)
-    if cache_key is not None and key in _SQ_STATS_CACHE:
-        return _SQ_STATS_CACHE[key]
+    if cache_key is not None:
+        return derived.get_or_build(
+            "sq_stats",
+            embeddings.sparkSession,
+            (cache_key, n_centroids),
+            lambda: _sq_minmax_seeds_np(embeddings, n_centroids),
+        )
 
     def partial(batches):
         import numpy as np
@@ -835,8 +836,6 @@ def _sq_minmax_seeds_np(
         )
         order = np.argsort(seed_ids)
         stats = (mn, mx, seed_ids[order], seed_vecs[order])
-    if cache_key is not None:
-        _SQ_STATS_CACHE[key] = stats
     return stats
 
 
@@ -902,8 +901,8 @@ def int8_topk(
     bit-identical IEEE doubles in numpy, Spark codegen and DuckDB.
 
     Zero-norm codes are excluded on both engines (cosine undefined).
-    ``stats_cache_key`` memoizes the quantizer stats per process
-    (:data:`_SQ_STATS_CACHE` — the registered query passes the immutable
+    ``stats_cache_key`` memoizes the quantizer stats per context
+    (:func:`_sq_minmax_seeds_np` — the registered query passes the immutable
     fixture dir).  An empty corpus returns an empty result."""
     quant = _sq_minmax_seeds_np(embeddings, IVF_CENTROIDS, stats_cache_key)[:2]
     return _ann_topk(
@@ -1034,7 +1033,7 @@ def int8_ivf_topk(
     The default codebook is the ``vec_id < 16`` seed slice, which rides
     out of the same corpus pass as the quantizer stats
     (:func:`_sq_minmax_seeds_np`); ``stats_cache_key`` memoizes that
-    pass per process (:data:`_SQ_STATS_CACHE`, shared with
+    pass per context (one memo entry, shared with
     :func:`int8_topk` and :func:`store_quantized_codes`), so repeated
     query batches skip it — a serving tier pins exactly this state
     between batches.  ``codebook``: an externally trained ``(ids,
@@ -1562,15 +1561,6 @@ def _embeddings_rowcount(sf_dir: str) -> int:
     return pq.ParquetFile(p).metadata.num_rows
 
 
-# Trained-codebook memo keyed by the caller-supplied cache_key (the
-# registered queries pass the fixture dir).  CONTRACT (r10 advice): a
-# key names an IMMUTABLE embeddings input — same contract as
-# _SQ_STATS_CACHE; passing a different frame
-# under a previously used key would silently serve the stale codebook,
-# so ad-hoc callers with mutable inputs must pass cache_key=None.
-_SEMDEDUP_ASSIGN_CACHE: dict[tuple, tuple] = {}
-
-
 def _trained_cell_assigner(
     embeddings: DataFrame,
     cache_key: str | None = None,
@@ -1585,22 +1575,22 @@ def _trained_cell_assigner(
     ``mapInPandas`` on a BATCH frame and on a STREAMING micro-batch
     (the streaming twin's ingest-side assignment).
 
-    ``cache_key``: opt-in process-level memo of the trained state
-    (centroids + quantizer stats — ≤ cells·(dim+1) + 2·dim doubles),
-    the `_SQ_STATS_CACHE` serve-tier contract: the registered
-    queries pass the immutable fixture dir, so the classify paths pay
-    the two-Lloyd-round training once per process — production trains
-    at index build (the cost `ivf_kmeans_codebook` measures) and PINS
-    exactly this state between ingests."""
+    ``cache_key``: opt-in memo of the trained state (centroids +
+    quantizer stats — ≤ cells·(dim+1) + 2·dim doubles) per
+    ``(cache_key, n_centroids)``, the :func:`_sq_minmax_seeds_np`
+    serve-tier contract: the registered queries pass the immutable
+    fixture dir, so the classify paths pay the two-Lloyd-round training
+    once per context — production trains at index build (the cost
+    `ivf_kmeans_codebook` measures) and PINS exactly this state between
+    ingests.  CONTRACT (r10 advice): a key names an IMMUTABLE embeddings
+    input; passing a different frame under a used key would silently
+    serve the stale codebook, so ad-hoc callers with mutable inputs must
+    pass cache_key=None."""
     import numpy as np
 
     from .dedup import _repartition_if_narrow
 
-    memo_key = (cache_key, n_centroids) if cache_key is not None else None
-    cached = _SEMDEDUP_ASSIGN_CACHE.get(memo_key) if memo_key is not None else None
-    if cached is not None:
-        cent_ids, cent_mat, cent_nrm, mn, mx = cached
-    else:
+    def train():
         cent_ids, _counts, cents = kmeans_codebook_train(
             _repartition_if_narrow(embeddings, cap=8), n_centroids=n_centroids
         )
@@ -1610,8 +1600,14 @@ def _trained_cell_assigner(
         # ties toward the smaller cell id, mirroring the oracle ROW_NUMBER
         cent_nrm = np.sqrt((cent_mat * cent_mat).sum(axis=1))
         mn, mx = _sq_minmax_seeds_np(embeddings, n_centroids)[:2]
-        if memo_key is not None:
-            _SEMDEDUP_ASSIGN_CACHE[memo_key] = (cent_ids, cent_mat, cent_nrm, mn, mx)
+        return cent_ids, cent_mat, cent_nrm, mn, mx
+
+    cent_ids, cent_mat, cent_nrm, mn, mx = derived.get_or_build(
+        "semdedup_assign",
+        embeddings.sparkSession,
+        None if cache_key is None else (cache_key, n_centroids),
+        train,
+    )
 
     def assign(batches):
         import numpy as np
@@ -2456,7 +2452,7 @@ def store_quantized_codes(
     :func:`int8_ivf_from_store` instead of re-reading the sidecar and
     centroid rows it just wrote (two driver jobs saved per rebuild).
     ``stats_cache_key`` memoizes the fused stats+seed pass per immutable
-    input in :data:`_SQ_STATS_CACHE`, the memo :func:`int8_topk` and
+    input (:func:`_sq_minmax_seeds_np`), the memo :func:`int8_topk` and
     :func:`int8_ivf_topk` read too."""
     mn, mx, seed_ids, seed_vecs = _sq_minmax_seeds_np(
         embeddings, n_centroids, stats_cache_key
@@ -2492,15 +2488,6 @@ def store_quantized_codes(
     return mn, mx, cent_ids, cents
 
 
-# serve-path codebook memo: store path -> (mn, mx, cent_ids, cents).
-# A production serving tier pins the (tiny: cells × dim) codebook in
-# memory and only re-reads it when the nightly rebuild swaps the store;
-# opting in skips two driver-side jobs (meta read + centroid collect)
-# per query batch.  Callers that rewrite the store in-place (the
-# build+serve lifecycle query) must NOT opt in.
-_CODEBOOK_CACHE: dict[str, tuple] = {}
-
-
 def int8_ivf_from_store(
     spark: SparkSession,
     path: str,
@@ -2521,7 +2508,14 @@ def int8_ivf_from_store(
     ``codebook``: the ``(mn, mx, cent_ids, cents)`` tuple a just-run
     :func:`store_quantized_codes` returned — a build+serve lifecycle
     passes it to skip re-reading the sidecar + centroid rows it wrote
-    moments ago (takes precedence over the path-keyed cache)."""
+    moments ago (takes precedence over the path-keyed cache).
+
+    ``cache_codebook``: memoize the codebook read per store path.  A
+    production serving tier pins the (tiny: cells × dim) codebook in
+    memory and only re-reads it when the nightly rebuild swaps the
+    store; opting in skips two driver-side jobs (meta read + centroid
+    collect) per query batch.  Callers that rewrite the store in-place
+    (the build+serve lifecycle query) must NOT opt in."""
     import numpy as np
 
     # explicit schema: a store built from an empty corpus holds no
@@ -2529,10 +2523,8 @@ def int8_ivf_from_store(
     store = spark.read.schema(
         "vec_id long, qv array<smallint>, nrm double, cell long"
     ).parquet(path)
-    cb = codebook
-    if cb is None and cache_codebook:
-        cb = _CODEBOOK_CACHE.get(path)
-    if cb is None:
+
+    def read_codebook():
         meta = spark.read.parquet(path + "_meta").collect()[0]
         cent_rows = (
             store.filter(F.col("vec_id") < IVF_CENTROIDS).select("vec_id", "qv").collect()
@@ -2544,15 +2536,16 @@ def int8_ivf_from_store(
             if cent_rows
             else np.zeros((0, DIM))
         )
-        cb = (
+        return (
             np.array(meta["mn"], dtype=np.float64),
             np.array(meta["mx"], dtype=np.float64),
             cent_ids[order],
             cents,
         )
-        if cache_codebook:
-            _CODEBOOK_CACHE[path] = cb
-    mn, mx, cent_ids, cents = cb
+
+    mn, mx, cent_ids, cents = codebook or derived.get_or_build(
+        "codebook", spark, path if cache_codebook else None, read_codebook
+    )
     batch = _collect_batch(queries, (mn, mx))
     probe = _nearest_cells(
         batch[1], batch[2], _live_codes(cent_ids, cents), n_probe, _code_dots
@@ -2585,12 +2578,36 @@ def _store_tag(sf_dir: str) -> str:
     )
 
 
-# build+serve lifecycle memo: sf_dir -> (store path, codebook).  The
-# nightly rebuild runs AT MOST ONCE per process (the
-# ensure_incremental_store pattern, r9 verdict item 3) so the benched
-# row measures the steady-state serve contract; the rebuild cost itself
-# is a first-class row of its own (ann_int8_store_build).
-_LIFECYCLE_STORES: dict[str, tuple] = {}
+def _ensure_store(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    emb: DataFrame,
+    stats_cache_key: str | None = None,
+) -> tuple[str, tuple]:
+    """Write the cell-partitioned int8 store ``kafquack_<name>_<tag>`` of
+    ``emb`` at most once per context and return ``(path, codebook)``.
+    The nightly rebuild is a separate, scheduled cost (its own row,
+    :func:`ann_int8_store_build`), so the rows served from a store
+    measure the steady-state contract; a store no longer
+    :func:`_store_intact` is rebuilt."""
+    import os
+
+    from .dedup import _repartition_if_narrow
+
+    def build():
+        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+        path = os.path.join(
+            warehouse.removeprefix("file:"), f"kafquack_{name}_" + _store_tag(sf_dir)
+        )
+        cb = store_quantized_codes(
+            _repartition_if_narrow(emb), path, stats_cache_key=stats_cache_key
+        )
+        return path, cb
+
+    return derived.get_or_build(
+        name, spark, sf_dir, build, valid=lambda got: _store_intact(got[0])
+    )
 
 
 def _store_intact(path: str) -> bool:
@@ -2612,7 +2629,7 @@ def _store_intact(path: str) -> bool:
 def ann_int8_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production ANN serving lifecycle: materialize the
     cell-partitioned int8 code store (one corpus encode pass +
-    partitioned write) AT MOST ONCE per process, then serve the
+    partitioned write) AT MOST ONCE per context, then serve the
     standard query batch FROM the store — partition pruning on ``cell``
     replaces per-batch re-assignment, so serving touches only probed
     cells' files and never the float vectors.  Bit-identical to
@@ -2620,33 +2637,17 @@ def ann_int8_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shared oracle.
 
     Round-10 measurement split (r9 verdict item 3): the build is
-    memoized per fixture dir, so this row now measures the
-    steady-state serve off the builder's IN-MEMORY codebook (vs
+    memoized per fixture dir (:func:`_ensure_store`), so this row now
+    measures the steady-state serve off the builder's IN-MEMORY codebook (vs
     :func:`ann_int8_store_serve`, which re-derives the codebook from
     the written sidecar — the cold-serving-tier path); the one-time
     rebuild cost is its own oracled row, :func:`ann_int8_store_build`.
     """
-    import os
-
-    from .dedup import _repartition_if_narrow
-
     emb = load_tables(spark, sf_dir)["embeddings"]
-    got = _LIFECYCLE_STORES.get(sf_dir)
-    if got is not None and _store_intact(got[0]):
-        path, cb = got
-    else:
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        path = os.path.join(
-            warehouse.removeprefix("file:"),
-            "kafquack_int8_store_" + _store_tag(sf_dir),
-        )
-        # the builder just derived the codebook — hand it to the serve
-        # call instead of re-reading the sidecar/centroids it wrote
-        # moments ago; minmax stats memoized per immutable fixture dir
-        cb = store_quantized_codes(
-            _repartition_if_narrow(emb), path, stats_cache_key=sf_dir
-        )
-        _LIFECYCLE_STORES[sf_dir] = (path, cb)
+    # the builder just derived the codebook — hand it to the serve call
+    # instead of re-reading the sidecar/centroids it wrote moments ago;
+    # minmax stats memoized per immutable fixture dir
+    path, cb = _ensure_store(spark, sf_dir, "int8_store", emb, sf_dir)
     queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0)
     return int8_ivf_from_store(spark, path, queries, codebook=cb)
 
@@ -2739,12 +2740,6 @@ def ann_int8_store_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the arriving slice for the upsert lifecycle (vec_id % 10 == 0 → ~10%
 # of the corpus arrives after the base index was built)
 STORE_UPSERT_MOD = 10
-
-# base-store memo for the upsert lifecycle: sf_dir -> (path, codebook).
-# The base build is the scheduled nightly rebuild cost (its own row);
-# the upsert row measures ONLY the per-ingest delta write + verify.
-_UPSERT_BASE_STORES: dict[str, tuple] = {}
-
 
 def _codebook_fingerprint(codebook: tuple) -> str:
     """Content digest of a ``(mn, mx, cent_ids, cents)`` codebook.
@@ -2873,30 +2868,16 @@ def ann_int8_store_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ensure_upsert_base(spark: SparkSession, sf_dir: str) -> tuple[str, tuple]:
-    """Build (at most once per process) the upsert lifecycle's BASE
+    """Build (at most once per context) the upsert lifecycle's BASE
     store from the pre-existing corpus slice (vec_id % 10 != 0) and
     return ``(path, codebook)`` — the scheduled nightly rebuild cost,
     measured by :func:`ann_int8_store_build`; the upsert / compact rows
     only pay their per-ingest / per-compaction work."""
-    import os
-
-    from .dedup import _repartition_if_narrow
-
-    got = _UPSERT_BASE_STORES.get(sf_dir)
-    if got is not None and _store_intact(got[0]):
-        return got
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    path = os.path.join(
-        warehouse.removeprefix("file:"),
-        "kafquack_int8_store_upsert_" + _store_tag(sf_dir),
-    )
     emb = load_tables(spark, sf_dir)["embeddings"]
     base = emb.filter(F.col("vec_id") % STORE_UPSERT_MOD != 0)
-    cb = store_quantized_codes(
-        _repartition_if_narrow(base), path, stats_cache_key=sf_dir + "#upsert-base"
+    return _ensure_store(
+        spark, sf_dir, "int8_store_upsert", base, sf_dir + "#upsert-base"
     )
-    _UPSERT_BASE_STORES[sf_dir] = (path, cb)
-    return _UPSERT_BASE_STORES[sf_dir]
 
 
 def compact_quantized_store(
@@ -2961,35 +2942,13 @@ def ann_int8_store_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _store_cell_counts_from_footers(spark, merged)
 
 
-# built-store memo for the serve-only path: sf_dir -> on-disk store path.
-# Process-scoped, not session-scoped — the store is plain parquet, so any
-# later session (the driver hands each query a bare one) can read a store
-# a previous session of this process built.
-_SERVE_STORES: dict[str, str] = {}
-
-
 def _ensure_int8_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build the cell-partitioned int8 store for ``sf_dir`` at most once
-    per process and return its path.  This is the steady-state serving
-    contract: the nightly rebuild (:func:`ann_int8_store_topk`'s
-    lifecycle) is a separate, scheduled cost — a query batch should only
-    ever pay the partition-pruned scan."""
-    import os
-
-    path = _SERVE_STORES.get(sf_dir)
-    if path and _store_intact(path):
-        return path
-    from .dedup import _repartition_if_narrow
-
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    path = os.path.join(
-        warehouse.removeprefix("file:"),
-        "kafquack_int8_store_serve_" + _store_tag(sf_dir),
-    )
+    """Path of the serve-only int8 store for ``sf_dir``
+    (:func:`_ensure_store`).  Context-scoped, not session-scoped — the
+    store is plain parquet, so any later session (the driver hands each
+    query a bare one) reads a store an earlier session built."""
     emb = load_tables(spark, sf_dir)["embeddings"]
-    store_quantized_codes(_repartition_if_narrow(emb), path)
-    _SERVE_STORES[sf_dir] = path
-    return path
+    return _ensure_store(spark, sf_dir, "int8_store_serve", emb)[0]
 
 
 @query("ann_int8_store_serve", _duck_sq_ivf_sql())
@@ -2998,7 +2957,7 @@ def ann_int8_store_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     prebuilt store — quantize the query batch from the sidecar stats,
     probe cells, and scan ONLY the probed cells' files (partition
     pruning; the float vectors are never read).  The store is built at
-    most once per process (:func:`_ensure_int8_store`) so repeated runs
+    most once per context (:func:`_ensure_int8_store`) so repeated runs
     measure serving, not the nightly rebuild — the measurement split
     the round-6 verdict asked for.  Results are bit-identical to
     :func:`int8_ivf_topk` from raw floats, hence the shared oracle."""

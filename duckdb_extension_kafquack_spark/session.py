@@ -19,6 +19,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import derived
+
 TABLES = (
     "region",
     "nation",
@@ -145,10 +147,6 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-_TABLE_CACHE: dict[tuple[int, str], dict[str, DataFrame]] = {}
-_ACTIVE_VIEWS: dict[int, str] = {}
-
-
 def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
     """Load every fixture table as a DataFrame and register temp views.
 
@@ -156,25 +154,32 @@ def load_tables(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, 
     for free; at 100 TB the same call reads a partitioned table and
     partition pruning applies — nothing here materializes on the driver.
 
-    DataFrames are cached per (session, sf_dir): they are immutable plan
+    DataFrames are memoized per (session, sf_dir): they are immutable plan
     handles, and re-deriving them costs ~1 s of file listing + schema
     reads per call — pure overhead when a suite runs 79 queries against
     the same directory.  Temp views are (re-)registered whenever the
     session's active sf_dir changes so SQL names always resolve to the
-    requested scale factor.
+    requested scale factor.  The session is named by its UUID, never
+    ``id(spark)``: an id is reused once a session is collected.
     """
     ensure_session_conf(spark)
-    key = (id(spark), sf_dir)
-    cached = _TABLE_CACHE.get(key)
-    if cached is None:
-        cached = {}
-        for name in TABLES:
-            path = os.path.join(sf_dir, f"{name}.parquet")
-            if os.path.exists(path):
-                cached[name] = read_table(spark, sf_dir, name)
-        _TABLE_CACHE[key] = cached
-    if _ACTIVE_VIEWS.get(id(spark)) != sf_dir:
+    session = spark._jsparkSession.sessionUUID()
+
+    def read_all() -> dict[str, DataFrame]:
+        return {
+            name: read_table(spark, sf_dir, name)
+            for name in TABLES
+            if os.path.exists(os.path.join(sf_dir, f"{name}.parquet"))
+        }
+
+    cached = derived.get_or_build("tables", spark, (session, sf_dir), read_all)
+
+    def register_views() -> str:
         for name, df in cached.items():
             df.createOrReplaceTempView(name)
-        _ACTIVE_VIEWS[id(spark)] = sf_dir
+        return sf_dir
+
+    derived.get_or_build(
+        "views", spark, session, register_views, valid=lambda active: active == sf_dir
+    )
     return cached

@@ -21,6 +21,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import derived
 from ..session import load_tables, read_table
 from ..suite import query
 
@@ -712,26 +713,20 @@ FROM cls GROUP BY source
 """
 
 
-#: memoized stream-side PLANS per (applicationId, sf_dir) — r14 (r13
-#: verdict item 4): constructing the banded-signature projection over
-#: the readStream frame costs ~0.45 s of pure py4j/analysis per call
-#: (measured: _docs_stream 0.15 s + sig_sets 0.1–0.2 s + bands 0.12 s),
-#: a third of the stored twin's whole bench row, and the plan is a
-#: DETERMINISTIC function of the fixture dir — the `_pr_iterate` lesson
-#: (cut plan-construction cost, not a result cache: every start() of
-#: the memoized frame plans and executes its own fresh micro-batches).
-#: Lifecycle notes: applicationIds are unique per SparkContext, so an
-#: entry built under a stopped context can never be RETURNED to a new
-#: one (new context → new key); dead entries merely occupy one dict
-#: slot per (context, dir) pair — bounded by contexts created in the
-#: process, not by workload.  Sibling sessions of ONE context share an
-#: entry by design: the builder session is conf-ensured before the
-#: build, so execution through the memoized frame's own session is
-#: always pinned, and callers still get their session ensured via the
-#: `ensure_session_conf` call before the lookup.
-_INCR_STREAM_SIDE_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
+# The three streaming plan builders (stream side, inline corpus rels,
+# semdedup arrivals) memoize their BUILT PLANS per (context, sf_dir) —
+# r14 (r13 verdict item 4): constructing the banded-signature projection
+# over the readStream frame costs ~0.45 s of pure py4j/analysis per call
+# (measured: _docs_stream 0.15 s + sig_sets 0.1–0.2 s + bands 0.12 s), a
+# third of the stored twin's whole bench row, and the plan is a
+# DETERMINISTIC function of the fixture dir — the `_pr_iterate` lesson
+# (cut plan-construction cost, not a result cache: every start() of the
+# memoized frame plans and executes its own fresh micro-batches).
+# Sibling sessions of ONE context share an entry by design: the builder
+# session is conf-ensured before the build, so execution through the
+# memoized frame's own session is always pinned, and callers still get
+# their session ensured via the `ensure_session_conf` call before the
+# lookup.
 def _incr_stream_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The arriving-batch side of incremental dedup as a STREAM:
     (doc_id, source, h, t1, n1, band, band_sig) — md5 content key,
@@ -744,7 +739,7 @@ def _incr_stream_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     build (:func:`..operators.dedup.minhash_knobs_for`, r12 advice) —
     the arriving batch and the stored index can never band-mismatch.
 
-    The built plan is memoized per (application, sf_dir): a streaming
+    The built plan is memoized per (context, sf_dir): a streaming
     DataFrame is just a plan — each ``writeStream.start()`` runs its
     own query against it, so reuse skips only the py4j construction
     cost, never any execution."""
@@ -752,29 +747,27 @@ def _incr_stream_side(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..session import ensure_session_conf
 
     ensure_session_conf(spark)  # even on a memo hit: the CALLER's session
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _INCR_STREAM_SIDE_MEMO.get(key)
-    if got is not None:
-        return got
-    nh, nb, nr = minhash_knobs_for(sf_dir)
-    sdocs = (
-        _docs_stream(spark, sf_dir)
-        .filter(F.col("doc_id") % 2 == 1)
-        .withColumn("h", F.md5("text"))
-    )
-    ssig = minhash_sig_sets(sdocs, nh, passthrough=("source", "h"))
-    built = minhash_bands(
-        ssig.select(
-            "doc_id", "source", "h",
-            F.col("stoks").alias("t1"), F.col("n").alias("n1"),
-            *[f"mh{i}" for i in range(nh)],
-        ),
-        nb,
-        nr,
-        passthrough=("source", "h", "t1", "n1"),
-    )
-    _INCR_STREAM_SIDE_MEMO[key] = built
-    return built
+
+    def build():
+        nh, nb, nr = minhash_knobs_for(spark, sf_dir)
+        sdocs = (
+            _docs_stream(spark, sf_dir)
+            .filter(F.col("doc_id") % 2 == 1)
+            .withColumn("h", F.md5("text"))
+        )
+        ssig = minhash_sig_sets(sdocs, nh, passthrough=("source", "h"))
+        return minhash_bands(
+            ssig.select(
+                "doc_id", "source", "h",
+                F.col("stoks").alias("t1"), F.col("n").alias("n1"),
+                *[f"mh{i}" for i in range(nh)],
+            ),
+            nb,
+            nr,
+            passthrough=("source", "h", "t1", "n1"),
+        )
+
+    return derived.get_or_build("incr_stream_side", spark, sf_dir, build)
 
 
 def _incr_classify(
@@ -840,11 +833,6 @@ def _incr_classify(
     )
 
 
-#: inline corpus-relation PLANS per (applicationId, sf_dir) — same
-#: construction-only memo as :data:`_INCR_STREAM_SIDE_MEMO`
-_INCR_INLINE_RELS_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def _incr_corpus_rels_inline(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -855,7 +843,7 @@ def _incr_corpus_rels_inline(
     prebuilt store instead.  Banding knobs from the shared
     corpus-derived law (:func:`..operators.dedup.minhash_knobs_for`).
 
-    Plans memoized per (application, sf_dir) like the stream side —
+    Plans memoized per (context, sf_dir) like the stream side —
     construction cost only; every micro-batch still re-derives the
     corpus relations at EXECUTION time (the inline twin's defining
     cost, which the stored twin exists to amortize)."""
@@ -863,27 +851,26 @@ def _incr_corpus_rels_inline(
     from ..session import ensure_session_conf
 
     ensure_session_conf(spark)  # even on a memo hit: the CALLER's session
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _INCR_INLINE_RELS_MEMO.get(key)
-    if got is not None:
-        return got
-    nh, nb, nr = minhash_knobs_for(sf_dir)
-    docs = load_tables(spark, sf_dir)["documents"]
-    corpus = docs.filter(F.col("doc_id") % 2 == 0)
-    corpus_hash = (
-        corpus.select(F.md5("text").alias("h")).distinct().withColumn("_ex", F.lit(1))
-    )
-    csig = minhash_sig_sets(corpus, nh)
-    cbands = minhash_bands(csig, nb, nr).select(
-        F.col("doc_id").alias("corpus_doc"), "band_sig"
-    )
-    csets = csig.select(
-        F.col("doc_id").alias("corpus_doc"),
-        F.col("stoks").alias("t2"),
-        F.col("n").alias("n2"),
-    )
-    _INCR_INLINE_RELS_MEMO[key] = (corpus_hash, cbands, csets)
-    return corpus_hash, cbands, csets
+
+    def build():
+        nh, nb, nr = minhash_knobs_for(spark, sf_dir)
+        docs = load_tables(spark, sf_dir)["documents"]
+        corpus = docs.filter(F.col("doc_id") % 2 == 0)
+        corpus_hash = (
+            corpus.select(F.md5("text").alias("h")).distinct().withColumn("_ex", F.lit(1))
+        )
+        csig = minhash_sig_sets(corpus, nh)
+        cbands = minhash_bands(csig, nb, nr).select(
+            F.col("doc_id").alias("corpus_doc"), "band_sig"
+        )
+        csets = csig.select(
+            F.col("doc_id").alias("corpus_doc"),
+            F.col("stoks").alias("t2"),
+            F.col("n").alias("n2"),
+        )
+        return corpus_hash, cbands, csets
+
+    return derived.get_or_build("incr_inline_rels", spark, sf_dir, build)
 
 
 def _incr_corpus_rels_stored(
@@ -892,7 +879,7 @@ def _incr_corpus_rels_stored(
     """The STORED-INDEX corpus relations: the band_sig-bucketed
     signature table, doc_id-bucketed shingle-set table, and h-bucketed
     md5 key table (:func:`..operators.dedup.ensure_incremental_store`)
-    are built at most once per process, and each micro-batch reads ONLY
+    are built at most once per context, and each micro-batch reads ONLY
     the stores: no corpus text re-read, no signature recompute, ever.
     This is the 100 TB nightly-ingest contract — re-shingling the
     corpus per ingest is the cost that kills naive incremental dedup —
@@ -1126,7 +1113,7 @@ def streaming_incremental_dedup_stored(spark: SparkSession, sf_dir: str) -> Data
     steady-state production shape of :func:`streaming_incremental_dedup`
     (which recomputes the corpus index inline): the band_sig-bucketed
     signature table, shingle-set store, and md5 key store are built at
-    most once per process (the scheduled nightly cost,
+    most once per context (the scheduled nightly cost,
     :func:`..operators.dedup.ensure_incremental_store`), and each
     arriving micro-batch classifies against the STORES alone — no
     corpus text re-read, no signature recompute.  At 100 TB this is the
@@ -1180,7 +1167,7 @@ def _fuzzy_bench_rels(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The benchmark-index store relations (bands bucketed on band_sig,
-    shingle sets bucketed on bench_id), built at most once per process
+    shingle sets bucketed on bench_id), built at most once per context
     (:func:`..operators.curation.ensure_fuzzy_bench_store`)."""
     from ..operators.curation import ensure_fuzzy_bench_store
 
@@ -1245,7 +1232,7 @@ def streaming_fuzzy_contamination(spark: SparkSession, sf_dir: str) -> DataFrame
     Benchmark side (r12, r11 verdict item 6): the benchmark index
     (band signatures bucketed on ``band_sig``, shingle sets bucketed on
     ``bench_id`` — :func:`..operators.curation.ensure_fuzzy_bench_store`)
-    is built at most once per process, and each micro-batch probes the
+    is built at most once per context, and each micro-batch probes the
     STORES — no benchmark re-shingling, no per-batch re-plan of the
     derivation; the probe join is keyed on ``band_sig`` alone so the
     bucketed table serves it (a cross-band md5-signature collision only
@@ -1349,35 +1336,28 @@ def _duck_streaming_semdedup_sql() -> str:
     return _duck_semdedup_incr_sql()
 
 
-#: arrivals-stream PLANS per (applicationId, sf_dir) — the same
-#: construction-only memo as :data:`_INCR_STREAM_SIDE_MEMO` (~0.16 s of
-#: py4j/analysis per build, measured r14)
-_SEMDEDUP_ARRIVALS_MEMO: dict[tuple[str, str], DataFrame] = {}
-
-
 def _build_semdedup_arrivals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The arriving-vector stream for the SemDeDup ingest twin: a
     map-only readStream projection — NO joins, NO hints, no state; the
     classify happens per micro-batch inside foreachBatch (the fused
     kernel, or the collect-free cell join beyond the batch cap).  Split
     out so plan tests can pin the stream frame's shape without draining
-    anything.  Plan memoized per (application, sf_dir) — construction
-    cost only, every start() executes fresh."""
+    anything.  Plan memoized per (context, sf_dir) like
+    :func:`_incr_stream_side` (~0.16 s of py4j/analysis per build,
+    measured r14) — construction cost only, every start() executes
+    fresh."""
     from ..operators.similarity import SEMDEDUP_BATCH_MOD
     from ..session import ensure_session_conf
 
     ensure_session_conf(spark)  # even on a memo hit: the CALLER's session
-    key = (spark.sparkContext.applicationId, sf_dir)
-    got = _SEMDEDUP_ARRIVALS_MEMO.get(key)
-    if got is not None:
-        return got
-    built = (
-        _emb_stream(spark, sf_dir)
+    return derived.get_or_build(
+        "semdedup_arrivals",
+        spark,
+        sf_dir,
+        lambda: _emb_stream(spark, sf_dir)
         .filter(F.col("vec_id") % SEMDEDUP_BATCH_MOD == 0)
-        .select("vec_id", "embedding")
+        .select("vec_id", "embedding"),
     )
-    _SEMDEDUP_ARRIVALS_MEMO[key] = built
-    return built
 
 
 @query("streaming_semdedup_incremental", _duck_streaming_semdedup_sql())

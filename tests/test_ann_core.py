@@ -1,11 +1,12 @@
 """The five ANN top-k entry points share one kernel (`_ann_topk`) and
-one int8 quantizer-state memo (`_SQ_STATS_CACHE`): pin their common
+one int8 quantizer-state memo (`derived` kind "sq_stats"): pin their common
 edge behaviour and the memo sharing."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from duckdb_extension_kafquack_spark import derived
 from duckdb_extension_kafquack_spark.operators import similarity as sim
 
 ENTRY_POINTS = {
@@ -88,11 +89,15 @@ def test_int8_stats_memo_is_shared_by_search_and_store_build(spark, tables, tmp_
     emb = tables["embeddings"]
     key = f"memo-share:{tmp_path}"
     entry = (key, sim.IVF_CENTROIDS)
-    before = set(sim._SQ_STATS_CACHE)
+
+    def stats():
+        return {k[2]: v for k, v in derived.entries("sq_stats").items()}
+
+    before = set(stats())
     try:
         sim.int8_ivf_topk(emb, stats_cache_key=key)
-        assert set(sim._SQ_STATS_CACHE) - before == {entry}
-        mn, mx, seed_ids, seed_vecs = sim._SQ_STATS_CACHE[entry]
+        assert set(stats()) - before == {entry}
+        mn, mx, seed_ids, seed_vecs = stats()[entry]
 
         j0 = jobs_submitted(spark)
         warm = sim.store_quantized_codes(emb, str(tmp_path / "warm"), stats_cache_key=key)
@@ -101,7 +106,7 @@ def test_int8_stats_memo_is_shared_by_search_and_store_build(spark, tables, tmp_
         cold = sim.store_quantized_codes(emb, str(tmp_path / "cold"))
         cold_jobs = jobs_submitted(spark) - j0
 
-        assert set(sim._SQ_STATS_CACHE) - before == {entry}
+        assert set(stats()) - before == {entry}
         assert warm_jobs == cold_jobs - 1, (warm_jobs, cold_jobs)
         cent_ids, cents, _norms = sim._live_codes(
             seed_ids, sim._np_quantize(seed_vecs, mn, mx)
@@ -111,4 +116,4 @@ def test_int8_stats_memo_is_shared_by_search_and_store_build(spark, tables, tmp_
         for got, want in zip(cold, warm):
             np.testing.assert_array_equal(got, want)
     finally:
-        sim._SQ_STATS_CACHE.pop(entry, None)
+        derived.clear("sq_stats")

@@ -1066,12 +1066,14 @@ class TestInt8Store:
         round-7 verdict item 3) — and results equal the raw-float path."""
         import os
 
+        from duckdb_extension_kafquack_spark import derived
         from duckdb_extension_kafquack_spark.operators import similarity as sim
         from tests.conftest import SF_DIR
 
-        sim._SERVE_STORES.pop(SF_DIR, None)
+        derived.clear("int8_store_serve")
         first = sorted(map(tuple, sim.ann_int8_store_serve(spark, SF_DIR).collect()))
-        path = sim._SERVE_STORES[SF_DIR]
+        ((_app, _kind, key), (path, _cb)), = derived.entries("int8_store_serve").items()
+        assert key == SF_DIR
         marker = os.path.join(path + "_meta", "_SUCCESS")
         mtime = os.path.getmtime(marker)
         second = sorted(map(tuple, sim.ann_int8_store_serve(spark, SF_DIR).collect()))
@@ -1405,13 +1407,14 @@ class TestInt8StoreLifecycle:
         import glob
         import os
 
-        from duckdb_extension_kafquack_spark.operators import similarity
+        from duckdb_extension_kafquack_spark import derived
         from duckdb_extension_kafquack_spark.suite import REGISTRY
         from tests.conftest import SF_DIR
 
-        similarity._LIFECYCLE_STORES.pop(SF_DIR, None)
+        derived.clear("int8_store")
         REGISTRY["ann_int8_store_topk"].fn(spark, SF_DIR).collect()
-        path, _cb = similarity._LIFECYCLE_STORES[SF_DIR]
+        ((_app, _kind, key), (path, _cb)), = derived.entries("int8_store").items()
+        assert key == SF_DIR
         files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True))
         assert files
         mtimes = {f: os.path.getmtime(f) for f in files}
@@ -1713,22 +1716,23 @@ class TestStoreDurabilityEdges:
         evicts (and unpersists) the oldest instead of pinning unbounded
         corpus-scaled cache for process lifetime."""
         import duckdb_extension_kafquack_spark.operators.curation as cur
+        from duckdb_extension_kafquack_spark import derived
 
         docs = tables["documents"]
-        cur._GRAMS_PERSIST_LRU.clear()
+        derived.clear("grams")
         a = cur._persisted_grams(docs)
         b = cur._persisted_grams(docs.limit(10))
         c = cur._persisted_grams(docs.limit(20))
-        assert len(cur._GRAMS_PERSIST_LRU) == 2
+        assert len(derived.entries("grams")) == 2
         # same-plan call is a cache hit, not a new entry
         assert cur._persisted_grams(docs.limit(20)) is c
-        assert len(cur._GRAMS_PERSIST_LRU) == 2
+        assert len(derived.entries("grams")) == 2
         # evicted relation is unpersisted; survivors still cached
         assert a.storageLevel.useMemory is False
         assert c.storageLevel.useMemory is True
-        for df in (b, c):
-            df.unpersist(blocking=False)
-        cur._GRAMS_PERSIST_LRU.clear()
+        derived.clear("grams")  # unpersists b and c
+        assert b.storageLevel.useMemory is False
+        assert c.storageLevel.useMemory is False
 
 
 class TestInlineDedupCorpusRouting:
@@ -1738,10 +1742,10 @@ class TestInlineDedupCorpusRouting:
         (re-deriving the corpus index per ingest is the scale-killer
         the store amortizes).  Values are identical either way (shared
         oracle), so the check is that the routed run populates the
-        per-process store registry for the fixture dir — the stored
+        store memo for the fixture dir — the stored
         path's signature — and still returns the classify rollup."""
-        import duckdb_extension_kafquack_spark.operators.dedup as d
         import duckdb_extension_kafquack_spark.streaming.windows as w
+        from duckdb_extension_kafquack_spark import derived
 
         sf = "/root/testdata/sf0.001"
         baseline = {
@@ -1751,13 +1755,14 @@ class TestInlineDedupCorpusRouting:
         saved = w.INLINE_DEDUP_MAX_CORPUS
         w.INLINE_DEDUP_MAX_CORPUS = 0  # force the routing branch
         try:
-            d._INCR_STORES.pop(sf, None)  # prove the routed run rebuilds it
+            derived.clear("incr_store")  # prove the routed run rebuilds it
             routed = {
                 tuple(r) for r in w.streaming_incremental_dedup(spark, sf).collect()
             }
         finally:
             w.INLINE_DEDUP_MAX_CORPUS = saved
-        assert sf in d._INCR_STORES  # stored path ran
+        stored = {key for _app, _kind, key in derived.entries("incr_store")}
+        assert sf in stored  # stored path ran
         assert routed == baseline and len(routed) > 0
 
 

@@ -552,8 +552,12 @@ def test_verified_cc_labels_memo_shares_per_corpus(spark):
     (SparkContext, corpus plan) — the trained-codebook pattern.  The
     memo must hit for the same docs plan, miss for a semantically
     different one, and reuse must be value-identical to a fresh,
-    unmemoized iteration over the same pair relation."""
+    unmemoized iteration over the same pair relation.  Leaves no memo
+    entry or limit(0) pair persist behind for later tests."""
+    from duckdb_extension_kafquack_spark import derived
     from duckdb_extension_kafquack_spark.operators.dedup import (
+        _persisted_candidate_pairs,
+        _persisted_sig_sets,
         _persisted_verified_pairs,
         _verified_cc_labels,
         connected_components,
@@ -561,18 +565,30 @@ def test_verified_cc_labels_memo_shares_per_corpus(spark):
     from duckdb_extension_kafquack_spark.session import load_tables
 
     docs = load_tables(spark, SF_DIR)["documents"]
-    a = _verified_cc_labels(docs)
-    assert _verified_cc_labels(docs) is a  # memo hit: the shared frame
-    # a semantically different docs plan gets its own entry — no
-    # cross-corpus bleed through the memo key
-    assert _verified_cc_labels(docs.limit(0)) is not a
-    # shared labels are value-identical to a fresh unmemoized run
-    fresh = connected_components(
-        _persisted_verified_pairs(docs).select("doc1", "doc2")
-    )
-    assert sorted(map(tuple, a.collect())) == sorted(
-        map(tuple, fresh.collect())
-    )
+    empty = docs.limit(0)
+    try:
+        a = _verified_cc_labels(docs)
+        assert _verified_cc_labels(docs) is a  # memo hit: the shared frame
+        # a semantically different docs plan gets its own entry — no
+        # cross-corpus bleed through the memo key
+        assert _verified_cc_labels(empty) is not a
+        keys = {k[2] for k in derived.entries("verified_cc")}
+        assert {derived.plan_key(docs), derived.plan_key(empty)} <= keys
+        # shared labels are value-identical to a fresh unmemoized run
+        fresh = connected_components(
+            _persisted_verified_pairs(docs).select("doc1", "doc2")
+        )
+        assert sorted(map(tuple, a.collect())) == sorted(
+            map(tuple, fresh.collect())
+        )
+    finally:
+        derived.clear("verified_cc")
+        for persisted in (
+            _persisted_verified_pairs,
+            _persisted_candidate_pairs,
+            _persisted_sig_sets,
+        ):
+            persisted(empty).unpersist(blocking=False)
 
 
 def test_dedup_family_no_density_scaled_broadcast_hints(spark):
