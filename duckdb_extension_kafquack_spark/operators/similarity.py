@@ -765,7 +765,8 @@ def _sq_minmax_seeds_np(
 
     ``cache_key`` memoizes the result as the ONE int8 quantizer-state
     memo, ``derived`` kind "sq_stats" under ``(cache_key, n_centroids)``;
-    int8_topk, int8_ivf_topk and store_quantized_codes all read it.  A
+    int8_topk, int8_ivf_topk, store_quantized_codes and
+    kmeans_codebook_train (so every trained-codebook path) all read it.  A
     key names an IMMUTABLE embeddings input (the registered queries pass
     the fixture dir): a serving tier pins exactly this state between
     query batches and re-derives it only on index rebuild; a caller with
@@ -1133,6 +1134,7 @@ def kmeans_codebook_train(
     embeddings: DataFrame,
     n_centroids: int = IVF_CENTROIDS,
     iters: int = KMEANS_ITERS,
+    cache_key: str | None = None,
 ):
     """Distributed Lloyd iterations that TRAIN the IVF codebook instead
     of the deterministic ``vec_id < 16`` slice standing in for one — the
@@ -1166,7 +1168,12 @@ def kmeans_codebook_train(
     sums reduce in any order, so moving the fold in-plan is
     bit-identical.)  Returns ``(cell_ids, counts, cents)`` numpy state
     after ``iters`` rounds: ids, final-round member counts, and the
-    updated integer centroids."""
+    updated integer centroids.
+
+    ``cache_key`` keys the seeding pass in the ``sq_stats`` memo
+    (:func:`_sq_minmax_seeds_np` — same contract: a key names an
+    IMMUTABLE input); the registered queries pass the fixture dir, so
+    the trainers share the entry :func:`int8_ivf_topk` fills."""
     import numpy as np
 
     from pyspark import StorageLevel
@@ -1176,7 +1183,9 @@ def kmeans_codebook_train(
 
     # ONE seeding pass: the quantizer's (min, max) AND the seed slice
     # (vec_id < n_centroids) ride out of the same corpus scan
-    mn, mx, seed_ids, seed_vecs = _sq_minmax_seeds_np(embeddings, n_centroids)
+    mn, mx, seed_ids, seed_vecs = _sq_minmax_seeds_np(
+        embeddings, n_centroids, cache_key
+    )
     cent_ids, cents, _norms = _live_codes(seed_ids, _np_quantize(seed_vecs, mn, mx))
     if len(cent_ids) == 0:
         raise ValueError("no non-zero-norm seed vectors to initialize centroids")
@@ -1374,7 +1383,7 @@ def ivf_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _repartition_if_narrow(
         load_tables(spark, sf_dir)["embeddings"], cap=8
     )
-    ids, counts, cents = kmeans_codebook_train(emb)
+    ids, counts, cents = kmeans_codebook_train(emb, cache_key=sf_dir)
     norms = (cents * cents).sum(axis=1).astype(np.int64)
     # a SQL VALUES LocalRelation for the ≤|cells|-row result: no
     # Python-RDD task at execution (see _store_cell_counts_from_footers)
@@ -1439,8 +1448,8 @@ def ann_int8_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _repartition_if_narrow(
         load_tables(spark, sf_dir)["embeddings"], cap=8
     )
-    ids, _counts, cents = kmeans_codebook_train(emb)
-    return int8_ivf_topk(emb, codebook=(ids, cents))
+    ids, _counts, cents = kmeans_codebook_train(emb, cache_key=sf_dir)
+    return int8_ivf_topk(emb, codebook=(ids, cents), stats_cache_key=sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1578,7 +1587,9 @@ def _trained_cell_assigner(
     ``cache_key``: opt-in memo of the trained state (centroids +
     quantizer stats — ≤ cells·(dim+1) + 2·dim doubles) per
     ``(cache_key, n_centroids)``, the :func:`_sq_minmax_seeds_np`
-    serve-tier contract: the registered queries pass the immutable
+    serve-tier contract (training and the assigner's quantizer read the
+    ``sq_stats`` entry under the same key — one stats pass, shared with
+    :func:`int8_ivf_topk`): the registered queries pass the immutable
     fixture dir, so the classify paths pay the two-Lloyd-round training
     once per context — production trains at index build (the cost
     `ivf_kmeans_codebook` measures) and PINS exactly this state between
@@ -1592,14 +1603,16 @@ def _trained_cell_assigner(
 
     def train():
         cent_ids, _counts, cents = kmeans_codebook_train(
-            _repartition_if_narrow(embeddings, cap=8), n_centroids=n_centroids
+            _repartition_if_narrow(embeddings, cap=8),
+            n_centroids=n_centroids,
+            cache_key=cache_key,
         )
         live = (cents * cents).sum(axis=1) > 0
         cent_ids, cent_mat = cent_ids[live], cents[live]
         # trainer emits ids ascending; stable argsort then breaks cosine
         # ties toward the smaller cell id, mirroring the oracle ROW_NUMBER
         cent_nrm = np.sqrt((cent_mat * cent_mat).sum(axis=1))
-        mn, mx = _sq_minmax_seeds_np(embeddings, n_centroids)[:2]
+        mn, mx = _sq_minmax_seeds_np(embeddings, n_centroids, cache_key)[:2]
         return cent_ids, cent_mat, cent_nrm, mn, mx
 
     cent_ids, cent_mat, cent_nrm, mn, mx = derived.get_or_build(

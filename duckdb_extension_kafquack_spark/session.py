@@ -36,6 +36,18 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Spark keeps generated classes (whole-stage codegen, projections) in ONE
+# static per-JVM LRU of `spark.sql.codegen.cache.maxEntries`, 100 by
+# default.  Measured with CodegenMetrics in one process on 4 cores: the
+# 208-query registry compiles ~2,550 distinct classes at sf0.01 (2,583 at
+# sf0.1) and the perfbench corpus_curate mix ~260, so at 100 every warm
+# repeat evicted and re-ran Janino (~150-176 recompiles per warm curate
+# pass, 3,006 on a second registry pass; 4-14 and 90 at 4096).  4096
+# holds the whole registry.  The conf is static: only get_spark sessions
+# get it; a bare SparkSession built elsewhere keeps 100 — slower on
+# repeats, never wrong.
+CODEGEN_CACHE_ENTRIES = 4096
+
 
 def get_spark(app_name: str = "kafquack-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
@@ -68,6 +80,9 @@ def get_spark(app_name: str = "kafquack-spark", *, shuffle_partitions: int | Non
             "spark.python.daemon.module",
             "duckdb_extension_kafquack_spark.pyworker_daemon",
         )
+        # generated-class cache sized to the engine's working set
+        # (CODEGEN_CACHE_ENTRIES); static conf, so a bare session keeps 100
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # RocksDB state store (SURVEY §7.4): streaming state spills to
         # local disk instead of living on the JVM heap — session windows
         # and stateful dedup survive beyond toy state sizes.  Changelog

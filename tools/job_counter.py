@@ -1,10 +1,13 @@
-"""Count Spark JOBS submitted while building+running registered queries.
+"""Count Spark JOBS submitted and classes COMPILED while building+running
+registered queries.
 
-Usage: python tools/job_counter.py <sf_dir> <query> [<query>...]
+Usage: python tools/job_counter.py <sf_dir> [<query>...]
 
-Prints one line per query: `<name> jobs=<n> runs=<k>` for two
-invocations (so persist/memo warm-up effects are visible: run 1 pays
-derived-state builds, run 2 shows the steady-state job count).
+With no query names it runs every registered query.  It makes two
+passes over the listed queries in one process (run 1 pays derived-state
+builds and code generation; run 2 shows the steady state of a warm
+process) and prints one line per query,
+`<name> jobs=[run1, run2] compiles=[run1, run2]`, then a `TOTAL` line.
 
 Why (r13 verdict item 7): job-STRUCTURE optimizations — fewer
 convergence-check jobs in connected components, concurrent verify
@@ -13,7 +16,11 @@ during the store build — are invisible in returned-frame plan dumps
 so the only before/after evidence used to be interleaved stopwatch
 numbers.  The DAGScheduler's `nextJobId` counter (monotone, reflects
 every submitted job including checkpoint materializations and
-`collect`s) makes the count a first-class measurement.
+`collect`s) makes the count a first-class measurement.  Janino
+compilations are the same kind of hidden repeat work: a warm run that
+compiles again has lost its generated classes from Spark's codegen
+cache (`session.CODEGEN_CACHE_ENTRIES`), so the compile count shows
+that the way an extra job shows a lost memo.
 """
 
 from __future__ import annotations
@@ -37,17 +44,33 @@ def jobs_submitted(spark) -> int:
     return nid if isinstance(nid, int) else nid.get()
 
 
-def count_query_jobs(spark, sf_dir: str, name: str, runs: int = 2) -> list[int]:
-    """Jobs submitted per invocation of registered query ``name`` —
-    build + noop-sink execution, the bench's own timed action."""
+def classes_compiled(spark) -> int:
+    """Total Janino compilations in this JVM so far (plan execution
+    and, in local mode, tasks): `CodegenMetrics`' compilation-time histogram
+    records one sample per generated class that missed the codegen
+    cache."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def count_query_work(
+    spark, sf_dir: str, names: list[str]
+) -> dict[str, tuple[list[int], list[int]]]:
+    """``{name: (jobs per run, compiles per run)}`` for two passes over
+    ``names`` — build + noop-sink execution, the bench's own timed
+    action.  Run k of every query happens in pass k, so run 2 sees what
+    the whole first pass left behind (memos, cached classes)."""
     from duckdb_extension_kafquack_spark.suite import REGISTRY
 
-    q = REGISTRY[name]
-    counts = []
-    for _ in range(runs):
-        before = jobs_submitted(spark)
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        counts.append(jobs_submitted(spark) - before)
+    counts = {name: ([], []) for name in names}
+    for _ in range(2):
+        for name in names:
+            jobs0, compiles0 = jobs_submitted(spark), classes_compiled(spark)
+            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
+                "overwrite"
+            ).save()
+            counts[name][0].append(jobs_submitted(spark) - jobs0)
+            counts[name][1].append(classes_compiled(spark) - compiles0)
     return counts
 
 
@@ -57,15 +80,19 @@ def main() -> None:
     import duckdb_extension_kafquack_spark.streaming  # noqa: F401
     import duckdb_extension_kafquack_spark.tpch  # noqa: F401
     from duckdb_extension_kafquack_spark.session import get_spark, load_tables
+    from duckdb_extension_kafquack_spark.suite import REGISTRY
 
     sf_dir = sys.argv[1]
-    names = sys.argv[2:]
+    names = sys.argv[2:] or list(REGISTRY)
     spark = get_spark("job-counter")
     spark.sparkContext.setLogLevel("ERROR")
     load_tables(spark, sf_dir)
-    for name in names:
-        counts = count_query_jobs(spark, sf_dir, name)
-        print(f"{name} jobs={counts} (run1, run2)")
+    counts = count_query_work(spark, sf_dir, names)
+    for name, (jobs, compiles) in counts.items():
+        print(f"{name} jobs={jobs} compiles={compiles} (run1, run2)")
+    jobs = [sum(c[0][i] for c in counts.values()) for i in range(2)]
+    compiles = [sum(c[1][i] for c in counts.values()) for i in range(2)]
+    print(f"TOTAL queries={len(names)} jobs={jobs} compiles={compiles}")
 
 
 if __name__ == "__main__":
