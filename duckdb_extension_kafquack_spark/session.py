@@ -19,7 +19,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import derived
+from . import cds, derived
 
 TABLES = (
     "region",
@@ -96,7 +96,10 @@ def get_spark(app_name: str = "kafquack-spark", *, shuffle_partitions: int | Non
             "true",
         )
     )
-    return builder.getOrCreate()
+    # a fresh driver JVM starts from the host's class-data-sharing archive,
+    # or records its classes so that one is built at exit (cds)
+    with cds.driver_archive(builder):
+        return builder.getOrCreate()
 
 
 def ensure_session_conf(spark: SparkSession) -> None:
