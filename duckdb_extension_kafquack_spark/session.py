@@ -48,6 +48,39 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # repeats, never wrong.
 CODEGEN_CACHE_ENTRIES = 4096
 
+# Confs every stream reads at its START (runtime SQL confs), applied by
+# both get_spark's builder and ensure_session_conf:
+#
+# * RocksDB state store (SURVEY §7.4): streaming state spills to local
+#   disk instead of living on the JVM heap — session windows and stateful
+#   dedup survive beyond toy state sizes.  Changelog checkpointing uploads
+#   per-batch deltas, not full snapshots.
+# * FileSystem-based checkpoint manager for the offset WAL, commit log,
+#   file-sink ``_spark_metadata`` log and RocksDB changelogs.  Spark's
+#   default FileContext manager, on a JVM without libhadoop, forks
+#   ``readlink`` for each ``getFileLinkStatus`` its rename makes
+#   (``FileUtil.readLink`` → ``Shell.execCommand``) and forks ``chmod``
+#   for the file and its ``.crc``: ten commands and ~30 ms per checkpoint
+#   file, ~300 ms of state commit per trigger over 4 partitions.  This
+#   manager writes the same files through ``FileSystem.create`` (the
+#   checksummed local FS, so ``.crc`` sidecars stay; its two ``chmod``
+#   forks remain, ~8 ms a file) and renames with ``FileSystem.rename``.
+#   Atomicity is unchanged: its no-overwrite rename checks ``exists(dst)``
+#   and then renames, and FileContext's is the same check-then-rename on
+#   the local FS (Hadoop 3.4.2: ``AbstractFileSystem.renameInternal(src,
+#   dst, false)`` calls ``getFileLinkStatus(dst)``, throws if it exists,
+#   then ``renameInternal(src, dst)`` → ``DelegateToFileSystem`` →
+#   ``FileSystem.rename(src, dst, NONE)``, which checks again and calls
+#   ``rename``); a stream has one writer per checkpoint file either way.
+STREAM_CONFS = {
+    "spark.sql.streaming.stateStore.providerClass":
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    "spark.sql.streaming.checkpointFileManagerClass":
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager",
+}
+
 
 def get_spark(app_name: str = "kafquack-spark", *, shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the session.
@@ -83,19 +116,9 @@ def get_spark(app_name: str = "kafquack-spark", *, shuffle_partitions: int | Non
         # generated-class cache sized to the engine's working set
         # (CODEGEN_CACHE_ENTRIES); static conf, so a bare session keeps 100
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
-        # RocksDB state store (SURVEY §7.4): streaming state spills to
-        # local disk instead of living on the JVM heap — session windows
-        # and stateful dedup survive beyond toy state sizes.  Changelog
-        # checkpointing uploads per-batch deltas, not full snapshots.
-        .config(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-        )
-        .config(
-            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-            "true",
-        )
     )
+    for key, value in STREAM_CONFS.items():
+        builder = builder.config(key, value)
     # a fresh driver JVM starts from the host's class-data-sharing archive,
     # or records its classes so that one is built at exit (cds)
     with cds.driver_archive(builder):
@@ -113,21 +136,13 @@ def ensure_session_conf(spark: SparkSession) -> None:
     # gate that means 200 tasks per stateful-stream micro-batch; size to
     # the machine (runtime-settable; real clusters keep their own value
     # via SPARK_GRAFT_CPUS or AQE coalescing)
-    import os as _os
-
     spark.conf.set(
-        "spark.sql.shuffle.partitions", _os.environ.get("SPARK_GRAFT_CPUS", "32")
+        "spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32")
     )
-    # streaming-state confs are read at query START, so setting them on a
-    # live session covers the driver's bare SparkSession too
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true",
-    )
+    # stream confs are read at query START, so setting them on a live
+    # session covers the driver's bare SparkSession too
+    for key, value in STREAM_CONFS.items():
+        spark.conf.set(key, value)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

@@ -8,6 +8,8 @@ Covers the reference's negative binder test
 bind), split planning math, batch/stream row parity with the oracle
 harness, and restart replayability."""
 
+import json
+import os
 import tempfile
 import time
 
@@ -421,6 +423,118 @@ class TestParallelStreamReader:
             r.event_id for r in spark.read.parquet(EVENTS).select("event_id").collect()
         )
         assert got == want  # every offset exactly once, no dupes, no gaps
+
+    # (original event_id, insert its copy after this file position):
+    # three copies land after the stop with their originals before it, one
+    # pair sits wholly before the stop, one wholly after, and one copy is
+    # of an error row (filtered either way)
+    STATEFUL_COPIES = [(12, 650), (45, 700), (150, 780), (130, 170), (520, 560), (303, 720)]
+
+    @staticmethod
+    def _write_redelivery_topic(out_dir, copies) -> list[int]:
+        """An 800-message ``events.parquet`` (offset = event_id) with a
+        redelivered copy of each ``(event_id, position)`` inserted after
+        that file position; 100-row groups.  Returns the file order."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        order = list(range(800))
+        for eid, at in sorted(copies, key=lambda c: c[1], reverse=True):
+            order.insert(at + 1, eid)
+        t0 = 1_704_067_200_000_000  # 2024-01-01, µs; a copy keeps its original's ts
+        table = pa.table({
+            "event_id": pa.array(order, pa.int64()),
+            "ts": pa.array([t0 + e * 250_000 for e in order], pa.int64()).cast(pa.timestamp("us")),
+            "user_id": pa.array([e % 13 for e in order], pa.int64()),
+            "event_type": pa.array(["view"] * len(order)),
+            "value": pa.array([1.0] * len(order)),
+            "props": pa.array([f'{{"k": {e % 100}}}' for e in order]),
+        })
+        os.makedirs(out_dir, exist_ok=True)
+        pq.write_table(table, os.path.join(out_dir, "events.parquet"), row_group_size=100)
+        return order
+
+    def _stateful_restart(self, spark, tmp_path, copies):
+        """``topic_ingest``'s pipeline (watermark dedup, error filter,
+        parquet sink), stopped once batch 1 commits and restarted from the
+        same checkpoint, so the restart reloads the dedup state from the
+        RocksDB changelogs.  Returns the sink's (offset, k) rows and the
+        fixture's expected set, computed by DuckDB."""
+        import duckdb
+        from pyspark.sql import functions as F
+
+        from duckdb_extension_kafquack_spark.streaming.state import (
+            dedup_within_watermark,
+        )
+
+        topic = str(tmp_path / "topic")
+        ckpt, out = str(tmp_path / "ckpt"), str(tmp_path / "out")
+        order = self._write_redelivery_topic(topic, copies)
+
+        def start(**paced):
+            stream = read_kafquack(
+                spark, "localhost:9092", "events", "g", stream=True,
+                fixture_dir=topic, max_offsets_per_trigger=100, **paced,
+            )
+            pipeline = dedup_within_watermark(stream).filter(F.col("error").isNull()).select(
+                "offset", F.from_json("value", "k INT").getField("k").alias("k"),
+            )
+            return (
+                pipeline.writeStream.format("parquet")
+                .option("checkpointLocation", ckpt)
+                .trigger(processingTime="1 second")
+                .start(out)
+            )
+
+        q = start(start_offset=0)
+        try:
+            deadline = time.time() + 90
+            while not os.path.exists(os.path.join(ckpt, "commits", "1")):
+                assert time.time() < deadline and q.isActive, "batch 1 never committed"
+                time.sleep(0.02)
+        finally:
+            q.stop()
+        # where the first run's committed offsets end; the copies placed
+        # after it must meet their originals only through restored state
+        last = max(int(f) for f in os.listdir(os.path.join(ckpt, "commits")) if f.isdigit())
+        with open(os.path.join(ckpt, "offsets", str(last))) as fh:
+            stop = json.loads(fh.read().splitlines()[-1])["index"]
+        first_seen = {e: order.index(e) for e, _ in copies}
+        copy_pos = {e: len(order) - 1 - order[::-1].index(e) for e, _ in copies}
+        assert any(first_seen[e] < stop <= copy_pos[e] for e, _ in copies)
+
+        q = start()
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = sorted((r.offset, r.k) for r in spark.read.parquet(out).collect())
+        con = duckdb.connect()
+        want = con.execute(
+            "SELECT DISTINCT event_id, CAST(json_extract(props, '$.k') AS INTEGER) "
+            f"FROM '{topic}/events.parquet' WHERE event_id % 101 <> 0 ORDER BY 1"
+        ).fetchall()
+        con.close()
+        return got, [tuple(r) for r in want]
+
+    def test_stateful_restart_exactly_once(self, spark, tmp_path):
+        """Every non-error offset lands exactly once across a restart of
+        the stateful ingest pipeline, and no redelivery survives."""
+        got, want = self._stateful_restart(spark, tmp_path, self.STATEFUL_COPIES)
+        assert got == want
+
+    @pytest.mark.xfail(
+        strict=True,
+        reason="dedup_within_watermark keeps redeliveries of NULL-timestamp "
+        "messages (streaming/state.py; ROADMAP direction 1)",
+    )
+    def test_stateful_restart_null_timestamp_redelivery(self, spark, tmp_path):
+        """Offset 97 carries no broker timestamp (``event_id % 97``); its
+        copy lands after the restart."""
+        got, want = self._stateful_restart(
+            spark, tmp_path, self.STATEFUL_COPIES + [(97, 690)]
+        )
+        assert got == want
 
     def test_simple_reader_optin_falls_back(self):
         """simple_stream_reader=true raises the API's NOT_IMPLEMENTED
