@@ -2,11 +2,18 @@
 
 Every Python-worker task runs ``pyspark.worker_util.setup_spark_files``,
 which calls :func:`importlib.invalidate_caches`.  On CPython < 3.13 that
-makes every cached :class:`zipimport.zipimporter` (one per imported
-pyspark subpackage) re-read its archive's whole central directory — the
-3.5 MB ``pyspark.zip`` once per importer, ~260 ms per task before the
-task's own code starts (4-core VM, CPython 3.11, Spark 4.1).  CPython
-3.13 no longer does this eagerly.
+makes every cached :class:`zipimport.zipimporter` re-read its archive's
+whole central directory.  Spark puts two kinds of archive on the
+worker's path: ``pyspark.zip`` (3.5 MB, one importer per imported
+pyspark subpackage; ~260 ms per task before the task's own code starts,
+4-core VM, CPython 3.11, Spark 4.1) and the ``spark-core`` jar.  A
+``get_spark`` launch through the byte-compiled overlay (``cds``) imports
+pyspark from directories, so there the patch serves the jar, which
+every import not found earlier on the path searches (launch-to-UDF
+p50 ~98 ms with the stock daemon against 16-20 ms with this one,
+``tools/pyworker_floor.py``); it serves ``pyspark.zip`` again whenever
+the launch falls back to the real Spark home.  CPython 3.13 no longer
+re-reads archives eagerly.
 
 This module patches ``zipimporter.invalidate_caches`` to re-read an
 archive only when its ``os.stat`` (mtime_ns, size, inode) changed since

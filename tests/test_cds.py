@@ -1,8 +1,12 @@
-"""The driver JVM's class-data-sharing archive (`cds`): which flags a
-launch gets, the fallbacks that keep a bad archive away from the JVM,
-one builder at a time, a bounded dump, and a JVM that really maps Spark
-classes from an archive published under the chosen flags."""
+"""The driver JVM's class-data-sharing archive and Python-library overlay
+(`cds`): which flags and Spark home a launch gets, the fallbacks that
+keep a bad archive or a partial overlay away from the JVM, one builder
+at a time, a bounded build, and a JVM started through the overlay that
+maps Spark classes from the archive while its Python processes import
+byte-compiled PySpark from the overlay."""
 
+import importlib.machinery
+import importlib.util
 import json
 import os
 import shlex
@@ -10,6 +14,7 @@ import subprocess
 import sys
 import threading
 import time
+import zipfile
 
 import pytest
 from pyspark import SparkContext
@@ -114,6 +119,7 @@ def test_unwritable_cache_gives_no_flags(tmp_path, monkeypatch):
     blocker.write_text("")
     monkeypatch.setenv("XDG_CACHE_HOME", str(blocker))
     assert cds.plan() is None
+    assert cds.overlay_plan() is None
 
 
 def _recording(launch, monkeypatch, sleep_s, pid_file=None):
@@ -198,6 +204,171 @@ def test_bit_flipped_archive_falls_back(cache):
     assert out.returncode == 0, out.stderr
 
 
+@pytest.fixture
+def home(tmp_path, monkeypatch):
+    """A small Spark home whose pyspark.zip and py4j zip hold one package
+    each; the launch would use it.  Overlay locks taken meanwhile are
+    released afterwards."""
+    h = tmp_path / "spark"
+    for sub in ("bin", "jars", "conf", "python/pyspark", "python/lib"):
+        (h / sub).mkdir(parents=True)
+    (h / "RELEASE").write_text("Spark\n")
+    (h / "python/lib/PY4J_LICENSE.txt").write_text("")
+    for name, files in {
+        "pyspark.zip": {"pyspark/__init__.py": "X = 1\n", "pyspark/sql/__init__.py": ""},
+        "py4j-0.10.9.9-src.zip": {"py4j/__init__.py": ""},
+    }.items():
+        with zipfile.ZipFile(h / "python/lib" / name, "w") as zf:
+            for path, text in files.items():
+                zf.writestr(path, text)
+    monkeypatch.setenv("SPARK_HOME", str(h))
+    in_use = []
+    monkeypatch.setattr(cds, "_IN_USE", in_use)
+    yield h
+    for fh in in_use:
+        fh.close()
+
+
+def _listing(root):
+    return sorted(
+        (os.path.relpath(os.path.join(d, n), root), os.path.islink(os.path.join(d, n)))
+        for d, dirs, files in os.walk(root)
+        for n in dirs + files
+    )
+
+
+def _launch_home(monkeypatch):
+    """SPARK_HOME as driver_archive sets it for a launch, and after."""
+
+    class Builder:
+        def config(self, *args):
+            pass
+
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    with cds.driver_archive(Builder()):
+        during = os.environ.get("SPARK_HOME")
+    return during, os.environ.get("SPARK_HOME")
+
+
+def test_overlay_links_the_home_and_compiles_the_zips(cache, home, monkeypatch):
+    before = _listing(home)
+    overlay = cds.overlay_plan()
+    assert overlay.path == str(cache / (cds.OVERLAY + overlay.key))
+    assert _launch_home(monkeypatch) == (str(home), str(home))  # not built yet
+    assert cds.build_overlay(overlay)
+    assert not cds.build_overlay(overlay)  # published: nothing to do
+    root = overlay.path
+    for rel in ("bin", "jars", "conf", "RELEASE", "python/pyspark", "python/lib/PY4J_LICENSE.txt"):
+        assert os.readlink(os.path.join(root, rel)) == str(home / rel)
+    for rel in ("python", "python/lib", "python/lib/pyspark.zip", "python/lib/py4j-0.10.9.9-src.zip"):
+        assert os.path.isdir(os.path.join(root, rel)) and not os.path.islink(os.path.join(root, rel))
+    for tree, pkg in (("pyspark.zip", "pyspark"), ("py4j-0.10.9.9-src.zip", "py4j")):
+        spec = importlib.machinery.PathFinder.find_spec(pkg, [os.path.join(root, "python/lib", tree)])
+        assert spec.origin == os.path.join(root, "python/lib", tree, pkg, "__init__.py")
+        assert os.path.isfile(importlib.util.cache_from_source(spec.origin))
+    assert sorted(os.listdir(cache)) == sorted(["build.lock", "conf", cds.OVERLAY + overlay.key])
+    assert _listing(home) == before
+    assert _launch_home(monkeypatch) == (root, str(home))
+
+
+def test_partial_overlay_is_never_used(cache, home, monkeypatch):
+    overlay = cds.overlay_plan()
+    os.makedirs(os.path.join(overlay.path, "python/lib/pyspark.zip"))
+    open(os.path.join(overlay.path, cds.OVERLAY_DONE), "w").close()  # py4j tree missing
+    assert _launch_home(monkeypatch) == (str(home), str(home))
+    assert cds.build_overlay(overlay)  # replaced by a complete one
+    assert _launch_home(monkeypatch)[0] == overlay.path
+
+
+def test_home_without_pyspark_zip_leaves_the_launch_untouched(cache, home, monkeypatch):
+    (home / "python/lib/pyspark.zip").unlink()
+    assert cds.overlay_plan() is None
+    assert _launch_home(monkeypatch) == (str(home), str(home))
+
+
+def test_killed_builders_temp_dir_is_removed(cache, home, monkeypatch):
+    overlay = cds.overlay_plan()
+    dead = f"{overlay.path}.99999999.tmp"
+    os.makedirs(os.path.join(dead, "python/lib/pyspark.zip/pyspark"))
+    os.symlink(home / "jars", os.path.join(dead, "jars"))
+    assert _launch_home(monkeypatch) == (str(home), str(home))
+    assert cds.build_overlay(overlay)
+    assert not os.path.lexists(dead) and os.path.isdir(home / "jars")
+    assert _launch_home(monkeypatch)[0] == overlay.path
+
+
+def test_changed_zip_names_a_new_overlay_and_prunes_the_old(cache, home, monkeypatch):
+    first = cds.overlay_plan()
+    assert cds.build_overlay(first)
+    assert cds._use_overlay(first)  # a live process launched through it
+    zip_path = home / "python/lib/pyspark.zip"
+    mtime = zip_path.stat().st_mtime_ns
+    os.utime(zip_path, ns=(mtime, mtime + 10**9))
+    second = cds.overlay_plan()
+    assert second.key != first.key
+    assert _launch_home(monkeypatch) == (str(home), str(home))  # stale one unused
+    assert cds.build_overlay(second)
+    assert os.path.isdir(first.path)  # kept while in use
+    cds._IN_USE.pop().close()
+    os.utime(zip_path, ns=(mtime, mtime + 2 * 10**9))
+    third = cds.overlay_plan()
+    assert cds.build_overlay(third)
+    assert sorted(n for n in os.listdir(cache) if n.startswith(cds.OVERLAY)) == [cds.OVERLAY + third.key]
+    assert os.path.isfile(zip_path) and os.path.isdir(home / "jars")
+
+
+def test_concurrent_overlay_builders_one_builds(cache, home, monkeypatch):
+    stock = cds.compile_command
+    wait = "import subprocess, sys, time; time.sleep(1); sys.exit(subprocess.call(sys.argv[1:]))"
+    monkeypatch.setattr(cds, "compile_command", lambda trees: [sys.executable, "-c", wait, *stock(trees)])
+    overlay = cds.overlay_plan()
+    results, errors = [], []
+
+    def run():
+        try:
+            results.append(cds.build_overlay(overlay))
+        except Exception as e:  # noqa: BLE001 — the assertion reports it
+            errors.append(e)
+
+    threads = [threading.Thread(target=run) for _ in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(60)
+    assert not errors and sorted(results) == [False, True]
+    assert cds.overlay_complete(overlay)
+
+
+def test_compile_past_the_timeout_publishes_nothing(cache, home, monkeypatch):
+    monkeypatch.setattr(cds, "compile_command", lambda trees: [sys.executable, "-c", "import time; time.sleep(60)"])
+    overlay = cds.overlay_plan()
+    t = time.perf_counter()
+    assert not cds.build_overlay(overlay, timeout=1)
+    assert time.perf_counter() - t < 20
+    assert not [n for n in os.listdir(cache) if n.startswith(cds.OVERLAY)]
+    assert _launch_home(monkeypatch) == (str(home), str(home))
+
+
+def test_archive_prune_leaves_overlays_alone(cache):
+    key = cds.plan().key
+    for name in (cds.OVERLAY + "0123456789abcdef", cds.OVERLAY + "0123456789abcdef.99999999.tmp"):
+        (cache / name / "python").mkdir(parents=True)
+    cds._prune(str(cache), key)
+    assert sorted(n for n in os.listdir(cache) if n.startswith(cds.OVERLAY)) == [
+        cds.OVERLAY + "0123456789abcdef",
+        cds.OVERLAY + "0123456789abcdef.99999999.tmp",
+    ]
+
+
+def test_archive_classpath_names_the_real_home(tmp_path):
+    overlay = cds.Overlay(str(tmp_path), "k", "/spark", "/spark-4.1.2", [])
+    cp = os.pathsep.join([f"{overlay.path}/conf", f"{overlay.path}/jars/a.jar", "/elsewhere/b.jar"])
+    assert cds._home_classpath(cp, overlay) == os.pathsep.join(
+        ["/spark/conf", "/spark/jars/a.jar", "/elsewhere/b.jar"]
+    )
+    assert cds._home_classpath(cp, None) == cp
+
+
 RECORD = """
 import atexit, sys
 from pyspark import SparkContext
@@ -219,14 +390,60 @@ rec = cds.Recording(
     jvm_flags=[a for a in args if a.startswith("--add-")],
 )
 assert cds.build(rec)
+# no overlay yet: the JVM ran from the real home, and one is built at exit
+assert jvm.java.lang.System.getenv("SPARK_HOME") == cds.overlay_plan().home
 """
 
 USE = """
+import importlib.util, json, os
+from pyspark import SparkContext
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from duckdb_extension_kafquack_spark.session import get_spark
 
+
+def where():
+    import py4j, pyspark
+    return [(m.__file__, os.path.exists(importlib.util.cache_from_source(m.__file__))) for m in (pyspark, py4j)]
+
+
+def udf(batches):
+    import pandas as pd
+    for _ in batches:
+        pass
+    yield pd.DataFrame(where(), columns=["file", "pyc"])
+
+
+class Planner(DataSourceReader):
+    def partitions(self):  # runs in the data-source planner process
+        return [InputPartition(w) for w in where()]
+
+    def read(self, partition):
+        yield partition.value
+
+
+class Probe(DataSource):
+    @classmethod
+    def name(cls):
+        return "overlay_probe"
+
+    def schema(self):
+        return "file string, pyc boolean"
+
+    def reader(self, schema):
+        return Planner()
+
+
+home = os.environ["SPARK_HOME"]
 spark = get_spark("cds-use")
-print(spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions"))
-print(spark.range(3).count())
+spark.dataSource.register(Probe)
+print(json.dumps({
+    "java_options": spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions"),
+    "count": spark.range(3).count(),
+    "home": [home, os.environ["SPARK_HOME"]],
+    "jvm_home": SparkContext._jvm.java.lang.System.getenv("SPARK_HOME"),
+    "udf": [list(r) for r in spark.range(2, numPartitions=2).mapInPandas(udf, "file string, pyc boolean").collect()],
+    "planner": [list(r) for r in spark.read.format("overlay_probe").load().collect()],
+}))
 """
 
 SPARK_CLASSES = [
@@ -237,32 +454,63 @@ SPARK_CLASSES = [
 ]
 
 
-def test_spark_classes_map_from_the_archive(tmp_path):
-    """End to end through get_spark: a recording launch, a published
-    archive, then a launch whose JVM loads Spark classes from it.  A
-    silent 'shared class paths mismatch' would load them from jars."""
+@pytest.fixture(scope="module")
+def relaunch(tmp_path_factory):
+    """End to end through get_spark: a recording launch from the real
+    Spark home that publishes an archive and, at exit, the overlay; then
+    a launch through the overlay, with its class-load log."""
+    tmp = tmp_path_factory.mktemp("relaunch")
     env = dict(
         os.environ,
         PYTHONPATH=os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")])),
-        XDG_CACHE_HOME=str(tmp_path / "xdg"),
+        XDG_CACHE_HOME=str(tmp / "xdg"),
         SPARK_GRAFT_CPUS="1",
         SPARK_GRAFT_DRIVER_MEM="1g",
+        PYSPARK_PYTHON=sys.executable,
     )
     env.pop("SPARK_CONF_DIR", None)
-    classlist = tmp_path / "spark.classlist"
+    classlist = tmp / "spark.classlist"
     classlist.write_text("\n".join(SPARK_CLASSES) + "\n")
-    run = dict(cwd=tmp_path, capture_output=True, text=True, timeout=300)
+    run = dict(cwd=tmp, capture_output=True, text=True, timeout=300)
     out = subprocess.run([sys.executable, "-c", RECORD, str(classlist)], env=env, **run)
     assert out.returncode == 0, out.stderr[-3000:]
+    overlays = [n for n in os.listdir(tmp / "xdg" / "kafquack-spark") if n.startswith(cds.OVERLAY)]
+    assert len(overlays) == 1, overlays
 
-    log = tmp_path / "class-load.log"
+    log = tmp / "class-load.log"
     env["PYSPARK_SUBMIT_ARGS"] = f"--driver-java-options '-Xlog:class+load=info:file={log}' pyspark-shell"
     out = subprocess.run([sys.executable, "-c", USE], env=env, **run)
     assert out.returncode == 0, out.stderr[-3000:]
-    assert "-XX:SharedArchiveFile=" in out.stdout and "-XX:+VerifySharedSpaces" in out.stdout
+    return json.loads(out.stdout.strip().splitlines()[-1]), log, str(tmp / "xdg" / "kafquack-spark" / overlays[0])
+
+
+def test_spark_classes_map_from_the_archive(relaunch):
+    """The JVM started through the overlay loads Spark classes from the
+    archive recorded under the real home.  A silent 'shared class paths
+    mismatch' would load them from jars."""
+    facts, log, overlay = relaunch
+    assert facts["jvm_home"] == overlay and facts["count"] == 3
+    assert "-XX:SharedArchiveFile=" in facts["java_options"] and "-XX:+VerifySharedSpaces" in facts["java_options"]
     shared = {
         line.split()[1]
         for line in log.read_text().splitlines()
         if line.endswith("source: shared objects file") and " org.apache.spark." in line
     }
     assert {c.replace("/", ".") for c in SPARK_CLASSES} <= shared, sorted(shared)[:20]
+
+
+def test_python_processes_import_compiled_pyspark_from_the_overlay(relaunch):
+    """A UDF worker and the data-source planner import pyspark and py4j
+    from the overlay's byte-compiled trees; the driver's SPARK_HOME is
+    what it was before the launch."""
+    facts, _, overlay = relaunch
+    before, after = facts["home"]
+    assert after == before != overlay
+    lib = os.path.join(overlay, "python", "lib")
+    (py4j,) = [n for n in os.listdir(lib) if n.startswith("py4j-") and n.endswith("-src.zip")]
+    expected = [
+        [os.path.join(lib, "pyspark.zip", "pyspark", "__init__.py"), True],
+        [os.path.join(lib, py4j, "py4j", "__init__.py"), True],
+    ]
+    assert facts["udf"] == expected * 2
+    assert facts["planner"] == expected
