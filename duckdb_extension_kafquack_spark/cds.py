@@ -35,6 +35,10 @@ paths are directories holding the extracted, byte-compiled trees (Python
 imports from a directory whatever its name).  The overlay is built at
 interpreter exit like the archive and published with one rename; a
 launch with no complete overlay is left as it was.
+
+The cache also holds one directory per process for the Unix domain
+sockets that carry a ``get_spark`` session's JVM-Python channels
+(:func:`socket_dir`).
 """
 
 from __future__ import annotations
@@ -50,6 +54,7 @@ import shutil
 import signal
 import subprocess
 import sys
+import tempfile
 import zipfile
 from dataclasses import dataclass
 
@@ -80,6 +85,13 @@ OVERLAY_DONE = ".kafquack-overlay"
 LAID_OUT = ("", "python", os.path.join("python", "lib"))
 # compileall's worker processes (~1.7 s for pyspark.zip on a 4-core VM)
 COMPILE_JOBS = 4
+# The socket directory of the process with pid P is the cache entry
+# SOCKETS + "P-" + a random suffix.
+SOCKETS = "uds-"
+# Spark names each socket ``<dir>/.<uuid4>.sock``: 43 bytes after the dir.
+SOCKET_NAME_LEN = 43
+# sun_path holds 108 bytes with its terminating NUL.
+SOCKET_PATH_MAX = 107
 
 
 @dataclass
@@ -222,6 +234,12 @@ def plan() -> Launch | None:
     return Launch(d, key, java, f"-XX:DumpLoadedClassList={classlist}", classlist)
 
 
+def _jvm_running() -> bool:
+    """This process already has a driver JVM (started here or handed in
+    by ``spark-submit``), so the next session starts none."""
+    return SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ
+
+
 @contextlib.contextmanager
 def driver_archive(builder):
     """Around ``builder.getOrCreate()``: when it is about to start the
@@ -234,7 +252,7 @@ def driver_archive(builder):
     launch only, ``SPARK_CONF_DIR`` names an empty directory in the cache
     (the stock conf dir holds only templates) and ``SPARK_HOME`` names a
     complete overlay.  With no overlay yet, one is built at exit."""
-    if SparkContext._gateway is not None or "PYSPARK_GATEWAY_PORT" in os.environ:
+    if _jvm_running():
         yield
         return
     launch, overlay = plan(), overlay_plan()
@@ -400,10 +418,11 @@ def _run_bounded(cmd: list[str], timeout: float) -> int | None:
 def _prune(d: str, key: str) -> None:
     """Keep only the current key's archive and size record, and the class
     lists of recorders still running; called under the build lock.
-    Overlays are pruned by :func:`build_overlay` only."""
+    Overlays are pruned by :func:`build_overlay` only, socket directories
+    by :func:`socket_dir` only."""
     for name in os.listdir(d):
         parts = name.split(".")
-        if name in ("build.lock", "conf") or name.startswith(OVERLAY) or (
+        if name in ("build.lock", "conf") or name.startswith((OVERLAY, SOCKETS)) or (
             parts[0] == key
             and (name.endswith((".jsa", ".json")) or (name.endswith(".classlist") and _alive(int(parts[1]))))
         ):
@@ -420,6 +439,42 @@ def _alive(pid: int) -> bool:
     except PermissionError:
         return True
     return True
+
+
+def socket_dir() -> str | None:
+    """A new directory in the cache for the Unix domain sockets of the
+    driver JVM about to start, removed at interpreter exit; the
+    directories of dead processes go first.  None when a JVM runs
+    already, or the directory cannot be made, or a socket path in it
+    would not fit in ``sun_path``.
+
+    Spark's default, ``java.io.tmpdir``, is no home for it: under
+    perfbench's per-run temp dir the socket paths passed the limit, and
+    the accumulator server's bind failed ``get_spark``.  It is made by
+    ``mkdtemp`` (mode 0700), the sockets' only guard: PySpark sends no
+    auth secret over a Unix socket."""
+    if _jvm_running():
+        return None
+    d = _cache_dir()
+    try:
+        os.makedirs(d, exist_ok=True)
+        for name in os.listdir(d):
+            pid = name[len(SOCKETS):].split("-")[0] if name.startswith(SOCKETS) else ""
+            if pid.isdigit() and not _alive(int(pid)):
+                shutil.rmtree(os.path.join(d, name), ignore_errors=True)
+        path = tempfile.mkdtemp(prefix=f"{SOCKETS}{os.getpid()}-", dir=d)
+    except OSError:
+        return None
+    if len(os.fsencode(path)) + SOCKET_NAME_LEN > SOCKET_PATH_MAX:
+        os.rmdir(path)
+        return None
+    atexit.register(_remove_socket_dir, path, os.getpid())
+    return path
+
+
+def _remove_socket_dir(path: str, pid: int) -> None:
+    if os.getpid() == pid:  # not in a forked child that inherited the hook
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def _python_zips(real: str) -> list[str] | None:

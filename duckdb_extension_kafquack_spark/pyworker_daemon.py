@@ -13,7 +13,10 @@ every import not found earlier on the path searches (launch-to-UDF
 p50 ~98 ms with the stock daemon against 16-20 ms with this one,
 ``tools/pyworker_floor.py``); it serves ``pyspark.zip`` again whenever
 the launch falls back to the real Spark home.  CPython 3.13 no longer
-re-reads archives eagerly.
+re-reads archives eagerly.  The same tool, over the session's Unix
+domain sockets: launch-to-UDF p50 19-20 ms (15-17 ms over loopback
+TCP), then 1.1-1.4 ms until the UDF has drained its one-row input
+(42.4-42.9 ms over TCP, the delayed-ACK stall; 3 runs each).
 
 This module patches ``zipimporter.invalidate_caches`` to re-read an
 archive only when its ``os.stat`` (mtime_ns, size, inode) changed since

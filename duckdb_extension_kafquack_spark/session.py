@@ -119,6 +119,16 @@ def get_spark(app_name: str = "kafquack-spark", *, shuffle_partitions: int | Non
     )
     for key, value in STREAM_CONFS.items():
         builder = builder.config(key, value)
+    # every JVM-Python channel runs over Unix domain sockets: over loopback
+    # TCP, Nagle's algorithm held each small Arrow message to a Python
+    # worker until the 40 ms delayed-ACK timer fired, once per task.  The
+    # sockets live in a 0700 directory of the cache (cds.socket_dir); with
+    # none, and in a bare session (static confs), the channels stay on TCP.
+    sockets = cds.socket_dir()
+    if sockets is not None:
+        builder = builder.config("spark.python.unix.domain.socket.enabled", "true").config(
+            "spark.python.unix.domain.socket.dir", sockets
+        )
     # a fresh driver JVM starts from the host's class-data-sharing archive,
     # or records its classes so that one is built at exit (cds)
     with cds.driver_archive(builder):

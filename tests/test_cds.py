@@ -9,9 +9,13 @@ import importlib.machinery
 import importlib.util
 import json
 import os
+import pathlib
 import shlex
+import shutil
+import stat
 import subprocess
 import sys
+import tempfile
 import threading
 import time
 import zipfile
@@ -118,8 +122,10 @@ def test_unwritable_cache_gives_no_flags(tmp_path, monkeypatch):
     blocker = tmp_path / "not-a-dir"
     blocker.write_text("")
     monkeypatch.setenv("XDG_CACHE_HOME", str(blocker))
+    monkeypatch.setattr(SparkContext, "_gateway", None)
     assert cds.plan() is None
     assert cds.overlay_plan() is None
+    assert cds.socket_dir() is None
 
 
 def _recording(launch, monkeypatch, sleep_s, pid_file=None):
@@ -358,6 +364,55 @@ def test_archive_prune_leaves_overlays_alone(cache):
         cds.OVERLAY + "0123456789abcdef",
         cds.OVERLAY + "0123456789abcdef.99999999.tmp",
     ]
+
+
+def test_archive_prune_leaves_socket_dirs_alone(cache, monkeypatch):
+    key = cds.plan().key
+    (cache / f"{cds.SOCKETS}1-abc").mkdir()
+    (cache / "stale.jsa").write_text("")
+    removed = []
+    monkeypatch.setattr(cds.os, "remove", removed.append)
+    cds._prune(str(cache), key)
+    assert removed == [str(cache / "stale.jsa")]
+
+
+def test_socket_dir_is_private_and_replaces_dead_processes_dirs(monkeypatch):
+    # pytest's tmp_path is too long a home for sockets
+    base = tempfile.mkdtemp()
+    monkeypatch.setenv("XDG_CACHE_HOME", base)
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    cache = pathlib.Path(base, "kafquack-spark")
+    dead = subprocess.Popen([sys.executable, "-c", ""])
+    dead.wait()
+    stale = cache / f"{cds.SOCKETS}{dead.pid}-abc"
+    live = cache / f"{cds.SOCKETS}{os.getppid()}-abc"
+    for d in (stale, live):
+        d.mkdir(parents=True)
+        (d / ".x.sock").write_text("")
+    path = cds.socket_dir()
+    try:
+        assert sorted(os.listdir(cache)) == sorted([live.name, os.path.basename(path)])
+        assert os.path.basename(path).startswith(f"{cds.SOCKETS}{os.getpid()}-")
+        st = os.stat(path)
+        assert st.st_uid == os.getuid() and stat.S_IMODE(st.st_mode) == 0o700
+        assert len(os.fsencode(path)) + cds.SOCKET_NAME_LEN <= cds.SOCKET_PATH_MAX
+    finally:
+        cds._remove_socket_dir(path, os.getpid())
+        assert not os.path.exists(path)
+        shutil.rmtree(base)
+
+
+def test_socket_dir_falls_back_when_its_paths_would_not_fit(tmp_path, monkeypatch):
+    cache = tmp_path / ("x" * 80) / "kafquack-spark"
+    monkeypatch.setenv("XDG_CACHE_HOME", str(cache.parent))
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    assert cds.socket_dir() is None
+    assert os.listdir(cache) == []
+    # a JVM that runs already keeps the transport it was started with
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "short"))
+    assert cds.socket_dir() is None
+    assert not os.path.exists(tmp_path / "short")
 
 
 def test_archive_classpath_names_the_real_home(tmp_path):
