@@ -82,13 +82,27 @@ def _local_modules() -> list[types.ModuleType]:
 _CONST_TYPES = (int, float, str, bytes, bool, tuple, frozenset, list, dict, set)
 
 
-def _closure_parts(fn: types.FunctionType) -> dict[str, str]:
+def _closure_parts(
+    fn: types.FunctionType,
+    modules: list[types.ModuleType] | None = None,
+    consts: dict[str, tuple[str, tuple]] | None = None,
+) -> dict[str, str]:
     """{stable_key: source_or_repr} for fn's transitive reference set.
 
     Keys are (module, qualname) strings so the final hash is
-    independent of traversal order and interpreter identity."""
+    independent of traversal order and interpreter identity.  A caller
+    that fingerprints many queries shares ``modules`` (listing them
+    sorts all of sys.modules) and ``consts``, each constant's repr with
+    the local functions it reaches: a constant can be large (the
+    ``derived`` memo holds DataFrames and arrays once queries ran), and
+    many queries reach the same one."""
+    if modules is None:
+        modules = _local_modules()
+    if consts is None:
+        consts = {}
     parts: dict[str, str] = {}
     visited: set[tuple[str, str]] = set()
+    reached: list[types.FunctionType] = []  # by the constant being repr'd
 
     def add_function(f: types.FunctionType) -> None:
         key = (f.__module__ or "?", f.__qualname__)
@@ -117,7 +131,7 @@ def _closure_parts(fn: types.FunctionType) -> dict[str, str]:
         visited set, so DAG-shared acyclic objects still repr fully)
         breaks self-referential container constants."""
         if _is_local_function(obj):
-            add_function(obj)
+            reached.append(obj)
             return f"<fn {obj.__module__}:{obj.__qualname__}>"
         if isinstance(obj, (set, frozenset, list, tuple, dict)):
             oid = id(obj)
@@ -153,13 +167,19 @@ def _closure_parts(fn: types.FunctionType) -> dict[str, str]:
         return r
 
     def add_constant(mod: str, name: str, obj: object) -> None:
-        parts[f"const:{mod}:{name}"] = stable_repr(obj)
+        key = f"const:{mod}:{name}"
+        if key not in consts:
+            reached.clear()
+            consts[key] = (stable_repr(obj), tuple(reached))
+        parts[key], fns = consts[key]
+        for f in fns:
+            add_function(f)
 
     def resolve_everywhere(name: str) -> None:
         """Resolve a name against every loaded package module — catches
         functions imported INSIDE a function body, which never appear
         in the outer function's globals."""
-        for m in _local_modules():
+        for m in modules:
             obj = m.__dict__.get(name)
             if obj is None:
                 continue
@@ -196,9 +216,14 @@ def _closure_parts(fn: types.FunctionType) -> dict[str, str]:
     return parts
 
 
-def query_fingerprint(fn: types.FunctionType, oracle: str | None) -> str:
+def query_fingerprint(
+    fn: types.FunctionType,
+    oracle: str | None,
+    modules: list[types.ModuleType] | None = None,
+    consts: dict[str, tuple[str, tuple]] | None = None,
+) -> str:
     """Stable md5 of the query's source closure + oracle SQL."""
-    parts = _closure_parts(fn)
+    parts = _closure_parts(fn, modules, consts)
     h = hashlib.md5()
     h.update((oracle or "").encode())
     for key in sorted(parts):
@@ -212,6 +237,8 @@ def registry_fingerprints() -> dict[str, str]:
     modules must already be imported by the caller)."""
     from .suite import REGISTRY
 
+    modules, consts = _local_modules(), {}
     return {
-        name: query_fingerprint(q.fn, q.oracle) for name, q in REGISTRY.items()
+        name: query_fingerprint(q.fn, q.oracle, modules, consts)
+        for name, q in REGISTRY.items()
     }

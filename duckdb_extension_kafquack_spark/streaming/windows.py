@@ -228,16 +228,6 @@ def run_paced_stream_to_table(
                     f"paced stream {name!r} did not catch up in {timeout_s}s"
                 )
         finally:
-            import os as _os
-            import sys as _sys
-            if _os.environ.get("KAFQUACK_STREAM_DEBUG"):
-                for p in q.recentProgress:
-                    so = p["sources"][0]
-                    print(
-                        f"PACED-DEBUG batch={p['batchId']} in={p['numInputRows']} "
-                        f"{so['startOffset']}->{so['endOffset']}",
-                        file=_sys.stderr,
-                    )
             q.stop()
 
 

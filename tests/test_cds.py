@@ -78,7 +78,7 @@ def test_archive_under_a_stale_key_is_ignored_and_pruned(cache, monkeypatch):
     launch = cds.plan()
     assert launch.key == key and launch.classlist
     rec = _recording(launch, monkeypatch, sleep_s=0)
-    assert cds.build(rec)
+    assert rec.publish()
     assert sorted(os.listdir(cache)) == sorted(["build.lock", "conf", f"{key}.jsa", f"{key}.json", os.path.basename(launch.classlist)])
     assert cds.plan().classlist is None
 
@@ -144,7 +144,8 @@ def _recording(launch, monkeypatch, sleep_s, pid_file=None):
         "dump_command",
         lambda rec, archive: [sys.executable, "-c", script, archive, str(pid_file or ""), str(sleep_s)],
     )
-    return cds.Recording(launch, classpath="", jvm_flags=[])
+    launch.classpath, launch.jvm_flags = "", []
+    return launch
 
 
 def test_concurrent_builders_one_builds_neither_fails(cache, monkeypatch):
@@ -153,7 +154,7 @@ def test_concurrent_builders_one_builds_neither_fails(cache, monkeypatch):
 
     def run():
         try:
-            results.append(cds.build(rec))
+            results.append(rec.publish())
         except Exception as e:  # noqa: BLE001 — the assertion reports it
             errors.append(e)
 
@@ -163,7 +164,7 @@ def test_concurrent_builders_one_builds_neither_fails(cache, monkeypatch):
     for t in threads:
         t.join(60)
     assert not errors and sorted(results) == [False, True]
-    assert cds.archive_ok(str(cache), rec.launch.key)
+    assert rec.complete()
 
 
 def test_dump_past_the_timeout_is_killed_and_cleaned(cache, tmp_path, monkeypatch):
@@ -171,7 +172,7 @@ def test_dump_past_the_timeout_is_killed_and_cleaned(cache, tmp_path, monkeypatc
     pid_file = tmp_path / "dumper.pid"
     rec = _recording(launch, monkeypatch, sleep_s=60, pid_file=pid_file)
     t = time.perf_counter()
-    assert not cds.build(rec, timeout=2)
+    assert not rec.publish(timeout=2)
     assert time.perf_counter() - t < 20
     with pytest.raises(ProcessLookupError):  # killed and reaped
         os.kill(int(pid_file.read_text()), 0)
@@ -179,7 +180,7 @@ def test_dump_past_the_timeout_is_killed_and_cleaned(cache, tmp_path, monkeypatc
     # each failure is counted; past the cap, processes stop recording
     for _ in range(cds.MAX_FAILED_BUILDS - 1):
         assert cds.plan().classlist
-        assert not cds.build(_recording(launch, monkeypatch, sleep_s=60), timeout=0.2)
+        assert not _recording(launch, monkeypatch, sleep_s=60).publish(timeout=0.2)
     assert cds.plan() is None
 
 
@@ -261,8 +262,8 @@ def test_overlay_links_the_home_and_compiles_the_zips(cache, home, monkeypatch):
     overlay = cds.overlay_plan()
     assert overlay.path == str(cache / (cds.OVERLAY + overlay.key))
     assert _launch_home(monkeypatch) == (str(home), str(home))  # not built yet
-    assert cds.build_overlay(overlay)
-    assert not cds.build_overlay(overlay)  # published: nothing to do
+    assert overlay.publish()
+    assert not overlay.publish()  # published: nothing to do
     root = overlay.path
     for rel in ("bin", "jars", "conf", "RELEASE", "python/pyspark", "python/lib/PY4J_LICENSE.txt"):
         assert os.readlink(os.path.join(root, rel)) == str(home / rel)
@@ -282,7 +283,7 @@ def test_partial_overlay_is_never_used(cache, home, monkeypatch):
     os.makedirs(os.path.join(overlay.path, "python/lib/pyspark.zip"))
     open(os.path.join(overlay.path, cds.OVERLAY_DONE), "w").close()  # py4j tree missing
     assert _launch_home(monkeypatch) == (str(home), str(home))
-    assert cds.build_overlay(overlay)  # replaced by a complete one
+    assert overlay.publish()  # replaced by a complete one
     assert _launch_home(monkeypatch)[0] == overlay.path
 
 
@@ -298,27 +299,27 @@ def test_killed_builders_temp_dir_is_removed(cache, home, monkeypatch):
     os.makedirs(os.path.join(dead, "python/lib/pyspark.zip/pyspark"))
     os.symlink(home / "jars", os.path.join(dead, "jars"))
     assert _launch_home(monkeypatch) == (str(home), str(home))
-    assert cds.build_overlay(overlay)
+    assert overlay.publish()
     assert not os.path.lexists(dead) and os.path.isdir(home / "jars")
     assert _launch_home(monkeypatch)[0] == overlay.path
 
 
 def test_changed_zip_names_a_new_overlay_and_prunes_the_old(cache, home, monkeypatch):
     first = cds.overlay_plan()
-    assert cds.build_overlay(first)
-    assert cds._use_overlay(first)  # a live process launched through it
+    assert first.publish()
+    assert first.use()  # a live process launched through it
     zip_path = home / "python/lib/pyspark.zip"
     mtime = zip_path.stat().st_mtime_ns
     os.utime(zip_path, ns=(mtime, mtime + 10**9))
     second = cds.overlay_plan()
     assert second.key != first.key
     assert _launch_home(monkeypatch) == (str(home), str(home))  # stale one unused
-    assert cds.build_overlay(second)
+    assert second.publish()
     assert os.path.isdir(first.path)  # kept while in use
     cds._IN_USE.pop().close()
     os.utime(zip_path, ns=(mtime, mtime + 2 * 10**9))
     third = cds.overlay_plan()
-    assert cds.build_overlay(third)
+    assert third.publish()
     assert sorted(n for n in os.listdir(cache) if n.startswith(cds.OVERLAY)) == [cds.OVERLAY + third.key]
     assert os.path.isfile(zip_path) and os.path.isdir(home / "jars")
 
@@ -332,7 +333,7 @@ def test_concurrent_overlay_builders_one_builds(cache, home, monkeypatch):
 
     def run():
         try:
-            results.append(cds.build_overlay(overlay))
+            results.append(overlay.publish())
         except Exception as e:  # noqa: BLE001 — the assertion reports it
             errors.append(e)
 
@@ -342,24 +343,38 @@ def test_concurrent_overlay_builders_one_builds(cache, home, monkeypatch):
     for t in threads:
         t.join(60)
     assert not errors and sorted(results) == [False, True]
-    assert cds.overlay_complete(overlay)
+    assert overlay.complete()
 
 
 def test_compile_past_the_timeout_publishes_nothing(cache, home, monkeypatch):
     monkeypatch.setattr(cds, "compile_command", lambda trees: [sys.executable, "-c", "import time; time.sleep(60)"])
     overlay = cds.overlay_plan()
     t = time.perf_counter()
-    assert not cds.build_overlay(overlay, timeout=1)
+    assert not overlay.publish(timeout=1)
     assert time.perf_counter() - t < 20
     assert not [n for n in os.listdir(cache) if n.startswith(cds.OVERLAY)]
     assert _launch_home(monkeypatch) == (str(home), str(home))
 
 
+def test_overlay_stops_building_after_repeated_failures(cache, home, monkeypatch):
+    """A host whose compile always runs past the timeout pays for it
+    MAX_FAILED_BUILDS times under one key, not at every exit."""
+    stock = cds.compile_command
+    monkeypatch.setattr(cds, "compile_command", lambda trees: [sys.executable, "-c", "import time; time.sleep(60)"])
+    overlay = cds.overlay_plan()
+    for _ in range(cds.MAX_FAILED_BUILDS):
+        assert not overlay.publish(timeout=0.5)
+    monkeypatch.setattr(cds, "compile_command", stock)
+    assert not overlay.publish()  # would now succeed, but is not tried
+    assert not overlay.complete()
+    assert not [n for n in os.listdir(cache) if n.startswith(cds.OVERLAY)]
+
+
 def test_archive_prune_leaves_overlays_alone(cache):
-    key = cds.plan().key
+    archive = cds.plan()
     for name in (cds.OVERLAY + "0123456789abcdef", cds.OVERLAY + "0123456789abcdef.99999999.tmp"):
         (cache / name / "python").mkdir(parents=True)
-    cds._prune(str(cache), key)
+    archive.prune()
     assert sorted(n for n in os.listdir(cache) if n.startswith(cds.OVERLAY)) == [
         cds.OVERLAY + "0123456789abcdef",
         cds.OVERLAY + "0123456789abcdef.99999999.tmp",
@@ -367,12 +382,12 @@ def test_archive_prune_leaves_overlays_alone(cache):
 
 
 def test_archive_prune_leaves_socket_dirs_alone(cache, monkeypatch):
-    key = cds.plan().key
+    archive = cds.plan()
     (cache / f"{cds.SOCKETS}1-abc").mkdir()
     (cache / "stale.jsa").write_text("")
     removed = []
     monkeypatch.setattr(cds.os, "remove", removed.append)
-    cds._prune(str(cache), key)
+    archive.prune()
     assert removed == [str(cache / "stale.jsa")]
 
 
@@ -425,13 +440,12 @@ def test_archive_classpath_names_the_real_home(tmp_path):
 
 
 RECORD = """
-import atexit, sys
+import sys
 from pyspark import SparkContext
 from duckdb_extension_kafquack_spark import cds
 from duckdb_extension_kafquack_spark.session import get_spark
 
 spark = get_spark("cds-record")
-atexit.unregister(cds._build_at_exit)  # build from a short list instead
 launch = cds.plan()
 assert launch.classlist, "no archive yet"
 opts = spark.sparkContext.getConf().get("spark.driver.defaultJavaOptions")
@@ -439,12 +453,9 @@ assert opts.startswith("-XX:DumpLoadedClassList="), opts
 jvm = SparkContext._jvm
 args = [str(a) for a in jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getInputArguments()]
 launch.classlist = sys.argv[1]
-rec = cds.Recording(
-    launch,
-    classpath=str(jvm.java.lang.System.getProperty("java.class.path")),
-    jvm_flags=[a for a in args if a.startswith("--add-")],
-)
-assert cds.build(rec)
+launch.classpath = str(jvm.java.lang.System.getProperty("java.class.path"))
+launch.jvm_flags = [a for a in args if a.startswith("--add-")]
+assert launch.publish()  # from a short list: the exit-time build finds it published
 # no overlay yet: the JVM ran from the real home, and one is built at exit
 assert jvm.java.lang.System.getenv("SPARK_HOME") == cds.overlay_plan().home
 """

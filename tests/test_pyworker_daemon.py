@@ -147,7 +147,6 @@ from duckdb_extension_kafquack_spark.session import get_spark
 spark = get_spark("uds-child")
 # this process checks the transport only: no archive or overlay builds
 atexit.unregister(cds._build_at_exit)
-atexit.unregister(cds._build_overlay_at_exit)
 
 
 def plus_one(batches):
