@@ -36,6 +36,7 @@ import signal
 import subprocess
 import sys
 import tempfile
+import time
 import zipfile
 from dataclasses import dataclass, field
 
@@ -43,9 +44,10 @@ from py4j.protocol import Py4JError
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 
-# The exit-time dump took 30-45 s for 13.6-17.4k classes on a 4-core VM;
-# 60 s keeps a perfbench build run (~55 s worker + dump) well inside its
-# 150 s worker limit, and a build that needs longer is killed.
+# The exit-time dump took 30-45 s for 13.6-17.4k classes on a 4-core VM.
+# The whole exit hook (JVM wait, overlay compile, archive dump) gets 60 s,
+# which keeps a perfbench build run (~55 s worker + builds) well inside its
+# 150 s worker limit; a build still running at the deadline is killed.
 BUILD_TIMEOUT_S = 60
 # After this many failed builds under one key no process tries again, so
 # a host that cannot build pays for it only a few times.
@@ -67,6 +69,9 @@ SOCKETS = "uds-"
 SOCKET_NAME_LEN = 43
 # sun_path holds 108 bytes with its terminating NUL.
 SOCKET_PATH_MAX = 107
+# Spark 4.1 rejects a longer spark.python.unix.domain.socket.dir ("should
+# be lower than 61"), and only when the first Python job runs.
+SPARK_SOCKET_DIR_MAX = 60
 # The pid in the name of a class list (<key>.<pid>.classlist) or of a
 # socket directory: that process holds the entry while it runs.
 _HOLDER = re.compile(r"^(?:uds-|[0-9a-f]{16}\.)(\d+)[.-]")
@@ -133,8 +138,11 @@ class Artefact:
             if self.owns(name) and name not in self.names:
                 _remove_unused(os.path.join(self.dir, name))
 
-    def at_exit(self) -> None:
-        self.publish()
+    def at_exit(self, deadline: float) -> None:
+        """Publish with the time left before ``deadline`` (``time.monotonic``)."""
+        left = deadline - time.monotonic()
+        if left > 0:
+            self.publish(left)
 
 
 @dataclass
@@ -187,7 +195,7 @@ class Archive(Artefact):
         archive publish also clears the overlay's failure count."""
         return name not in ("build.lock", "conf") and not name.startswith((OVERLAY, SOCKETS))
 
-    def at_exit(self) -> None:
+    def at_exit(self, deadline: float) -> None:
         try:
             if SparkContext._active_spark_context is not None:
                 SparkContext._active_spark_context.stop()  # before its JVM goes
@@ -195,8 +203,8 @@ class Archive(Artefact):
                 # the JVM exits on stdin EOF and flushes its class list
                 self.jvm.stdin.close()
                 with contextlib.suppress(subprocess.TimeoutExpired):
-                    self.jvm.wait(JVM_EXIT_WAIT_S)
-            self.publish()
+                    self.jvm.wait(max(0, min(JVM_EXIT_WAIT_S, deadline - time.monotonic())))
+            super().at_exit(deadline)
         finally:
             with contextlib.suppress(OSError):
                 os.remove(self.classlist)
@@ -420,9 +428,11 @@ def _home_classpath(classpath: str, overlay: Overlay | None) -> str:
 def _build_at_exit(pending: list[Artefact], pid: int) -> None:
     if os.getpid() != pid:  # a forked child inherited the hook
         return
+    # one budget for the whole hook: what one build uses, the next loses
+    deadline = time.monotonic() + BUILD_TIMEOUT_S
     for artefact in pending:
         try:
-            artefact.at_exit()
+            artefact.at_exit(deadline)
         except Exception as e:  # noqa: BLE001 — never fail the exit of the program
             print(f"kafquack-spark: {artefact.path} not built: {e}", file=sys.stderr)
 
@@ -462,9 +472,9 @@ def socket_dir() -> str | None:
     """A new 0700 directory (``mkdtemp``) in the cache for the Unix domain
     sockets of the driver JVM about to start, removed at interpreter exit;
     dead processes' ones go first.  None when a JVM runs already, or the
-    directory cannot be made, or a socket path in it would not fit in
-    ``sun_path``.  The mode is the sockets' only guard: PySpark sends no
-    auth secret over a Unix socket."""
+    directory cannot be made, or it is longer than Spark accepts, or a
+    socket path in it would not fit in ``sun_path``.  The mode is the
+    sockets' only guard: PySpark sends no auth secret over a Unix socket."""
     if _jvm_running():
         return None
     d = _cache_dir()
@@ -476,7 +486,7 @@ def socket_dir() -> str | None:
         path = tempfile.mkdtemp(prefix=f"{SOCKETS}{os.getpid()}-", dir=d)
     except OSError:
         return None
-    if len(os.fsencode(path)) + SOCKET_NAME_LEN > SOCKET_PATH_MAX:
+    if len(os.fsencode(path)) + SOCKET_NAME_LEN > SOCKET_PATH_MAX or len(path) > SPARK_SOCKET_DIR_MAX:
         os.rmdir(path)
         return None
     atexit.register(_remove_socket_dir, path, os.getpid())

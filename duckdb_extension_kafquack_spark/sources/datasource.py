@@ -29,8 +29,11 @@ Two backends:
   driver compares it row-for-row against DuckDB running the identical
   SQL projection.  Partitioning is metadata-only on the driver (parquet
   footer), one task per row-group span — with many row groups each task
-  reads exactly its groups; single-group local fixtures are index-sliced
-  so the scan still fans out.
+  reads exactly its groups; fewer groups than ``num_partitions`` are
+  index-sliced into at most ``num_partitions`` splits of at least
+  :data:`MIN_SPLIT_ROWS` rows each, because every task of a slice reads
+  its whole row group: a small micro-batch is one task, a large
+  single-group batch still fans out.
 * no ``fixture_dir`` → a real broker is required.  Bind-time
   reachability uses the reference's eager-connect contract
   (cpp:112-129, "Failed to create Kafka consumer: %s").  Fetching then
@@ -47,12 +50,8 @@ footer / broker metadata).  The stream reader (round 6) is a full
 :class:`~pyspark.sql.datasource.DataSourceStreamReader`: the driver
 plans each micro-batch's offset range from footer metadata only and
 ``partitions(start, end)`` slices it with the SAME row-group split math
-as the batch reader, so every micro-batch fans out to one task per
-split and rows flow executor-side (Arrow batches), never through the
-driver.  The previous driver-funneling
-:class:`~pyspark.sql.datasource.SimpleDataSourceStreamReader` remains
-available behind ``simple_stream_reader=true`` (the API's documented
-small-rate path, and the restart-exactness reference for tests).  The
+as the batch reader, so every micro-batch runs one task per split and
+rows flow executor-side (Arrow batches), never through the driver.  The
 highest-throughput production path remains Spark's JVM Kafka source via
 :func:`..sources.kafka.kafka_consumer`, and the module docstring of each
 says so.
@@ -64,13 +63,11 @@ import os
 from dataclasses import dataclass
 from typing import TYPE_CHECKING, Any, Iterator
 
-from pyspark.errors import PySparkNotImplementedError
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 from pyspark.sql.types import StructType
 
@@ -85,16 +82,23 @@ _EXTRA_OPTIONS = frozenset(
     {
         "fixture_dir",
         "topic_name",  # label stamped into the `topic` column for fixture replay
-        "num_partitions",  # minimum fan-out for single-row-group local fixtures
+        "num_partitions",  # at most N index-sliced splits, each ≥ MIN_SPLIT_ROWS rows
         "max_offsets_per_trigger",  # stream: rows per micro-batch
         "start_offset",  # stream: pacing anchor for fresh-checkpoint runs
         "validate_connection",
         "fail_on_data_loss",  # parity knob: accepted, recorded, no-op in replay
-        "simple_stream_reader",  # true → driver-side Simple reader (small-rate path)
     }
 )
 
 _REQUIRED = ("brokers", "topic", "group_id")
+
+#: Fewest rows an index-sliced split holds.  Each task of a split inside
+#: one row group reads that whole group, so a small range is one task.
+#: Above 500, so a 1,000-row trigger plans one split; at most 1,250, so
+#: the 10,000-row single-group sf0.01 fixture still fans out 8 ways.  The
+#: top of that range: in the split grid of SCALING.md a fourth split
+#: never paid off at up to 10,000 rows per trigger.
+MIN_SPLIT_ROWS = 1250
 
 
 def _bind_options(options: dict[str, str]) -> dict[str, str]:
@@ -141,54 +145,49 @@ def _events_path(fixture_dir: str) -> str:
     return os.path.join(fixture_dir, "events.parquet")
 
 
-def _project_pandas(events: "pa.Table", topic: str) -> "pa.Table":
+def _project(events: "pa.Table", topic: str) -> "pa.Table":
     """The synthetic 7-column projection (same math as synthetic._project,
     so the DataSource rows equal the `kafka_messages_batch` oracle).
 
-    Runs per-task on an Arrow slice; vectorized pandas/numpy only.
+    Runs per-task on an Arrow slice, in Arrow compute kernels only.
     Handles both shipped ``ts`` layouts (see session.normalize_event_ts):
-    int64 nanoseconds → floor-divide to µs; timestamp[us]/[ns] → as-is
-    (µs truncation like DuckDB).
+    int64 nanoseconds and timestamp[ns] → floored to µs; timestamp[us]
+    → as-is.
     """
-    import pandas as pd
     import pyarrow as pa
+    import pyarrow.compute as pc
 
-    df = events.select(["event_id", "ts", "user_id", "props"]).to_pandas()
-    eid = df["event_id"].to_numpy()
-    is_err = eid % 101 == 0
-    no_key = eid % 10 == 0
-    no_ts = eid % 97 == 0
+    # contiguous copies: pyarrow 16's if_else misreads a sliced string array
+    eid, ts, user, props = (
+        events[c].combine_chunks() for c in ("event_id", "ts", "user_id", "props")
+    )
 
-    if pd.api.types.is_integer_dtype(df["ts"]):
-        ts = pd.to_datetime((df["ts"] // 1000) * 1000, unit="ns")
-    else:
-        ts = pd.to_datetime(df["ts"]).dt.floor("us")
-    out = pd.DataFrame(
+    def divides(n: int):  # pyarrow 16 has no modulo kernel
+        return pc.equal(pc.subtract(eid, pc.multiply(pc.divide(eid, n), n)), 0)
+
+    is_err, no_key, no_ts = divides(101), divides(10), divides(97)
+    if pa.types.is_integer(ts.type):
+        ts = ts.cast(pa.timestamp("ns"))
+    if ts.type.unit == "ns":
+        ts = pc.floor_temporal(ts, unit="microsecond")
+    ts = ts.cast(pa.timestamp("us"))
+    user = user.cast(pa.int64())
+    text = pa.scalar(None, pa.string())
+    error = pc.binary_join_element_wise(
+        "Local: Broker transport failure (event ", eid.cast(pa.string()), ")", ""
+    )
+    return pa.table(
         {
-            "topic": topic,
-            "partition": (df["user_id"] % 4).astype("int32"),
-            "offset": eid.astype("int64"),
-            "timestamp": ts.mask(no_ts),
-            "key": df["user_id"].astype("int64").astype(str).mask(no_key),
-            "value": df["props"].mask(is_err),
-            "error": pd.Series(
-                "Local: Broker transport failure (event " + pd.Series(eid).astype(str) + ")",
-                index=df.index,
-            ).mask(~is_err),
+            "topic": pa.repeat(pa.scalar(topic, pa.string()), len(eid)),
+            # two's-complement low bits: the non-negative pmod(user_id, 4)
+            "partition": pc.bit_wise_and(user, 3).cast(pa.int32()),
+            "offset": eid.cast(pa.int64()),
+            "timestamp": pc.if_else(no_ts, pa.scalar(None, ts.type), ts),
+            "key": pc.if_else(no_key, text, user.cast(pa.string())),
+            "value": pc.if_else(is_err, text, props.cast(pa.string())),
+            "error": pc.if_else(is_err, error, text),
         }
     )
-    schema = pa.schema(
-        [
-            ("topic", pa.string()),
-            ("partition", pa.int32()),
-            ("offset", pa.int64()),
-            ("timestamp", pa.timestamp("us")),
-            ("key", pa.string()),
-            ("value", pa.string()),
-            ("error", pa.string()),
-        ]
-    )
-    return pa.Table.from_pandas(out, schema=schema, preserve_index=False)
 
 
 @dataclass
@@ -229,47 +228,53 @@ def fixture_total_rows(fixture_dir: str) -> int:
 
 
 def _range_splits(
-    path: str, topic: str, lo: int, hi: int, n_splits: int, starts: list[int]
+    path: str,
+    topic: str,
+    lo: int,
+    hi: int,
+    n_splits: int,
+    starts: list[int],
+    min_rows: int = MIN_SPLIT_ROWS,
 ) -> list[_ReplaySplit]:
     """Slice global index range [lo, hi) into ≤ ``n_splits`` balanced
-    splits, each mapped to the row-group span covering it — the split
+    splits of at least ``min_rows`` rows each (a shorter range is one
+    split), each mapped to the row-group span covering it — the split
     math shared by the batch reader and every stream micro-batch."""
     hi = min(hi, starts[-1])
     lo = max(0, lo)
     if hi <= lo:
         return []
-    n = min(n_splits, hi - lo)
+    n = min(n_splits, max(1, (hi - lo) // min_rows))
     nrg = len(starts) - 1
     bounds = [lo + (hi - lo) * i // n for i in range(n + 1)]
     splits = []
     for a, b in zip(bounds, bounds[1:]):
-        if a == b:
-            continue
         rg_start = max(i for i in range(nrg) if starts[i] <= a)
         rg_end = min(i for i in range(1, nrg + 1) if starts[i] >= b)
         splits.append(_ReplaySplit(path, topic, a, b, rg_start, rg_end, starts[rg_start]))
     return splits
 
 
-def _plan_replay_splits(path: str, topic: str, min_splits: int) -> list[_ReplaySplit]:
+def _plan_replay_splits(path: str, topic: str, n_splits: int) -> list[_ReplaySplit]:
     """Metadata-only planning (parquet footer; no data read on driver).
 
     Many row groups → one split per row group (the at-scale shape: a task
     reads exactly one group's column chunks).  Fewer groups than
-    ``min_splits`` (the single-split local-fixture trap, CLAUDE.md) →
-    index-slice within groups so the scan still parallelizes.
+    ``n_splits`` (the single-split local-fixture trap, CLAUDE.md) →
+    index-slice within groups (:func:`_range_splits`) so a large scan
+    still parallelizes.
     """
     starts = _rg_starts(path)
     total = starts[-1]
     if total == 0:
         return []
     nrg = len(starts) - 1
-    if nrg >= min_splits:
+    if nrg >= n_splits:
         return [
             _ReplaySplit(path, topic, starts[i], starts[i + 1], i, i + 1, starts[i])
             for i in range(nrg)
         ]
-    return _range_splits(path, topic, 0, total, min_splits, starts)
+    return _range_splits(path, topic, 0, total, n_splits, starts)
 
 
 def _read_replay_split(split: _ReplaySplit) -> Iterator["pa.RecordBatch"]:
@@ -282,7 +287,7 @@ def _read_replay_split(split: _ReplaySplit) -> Iterator["pa.RecordBatch"]:
     )
     lo = split.start - split.rg_offset
     tbl = tbl.slice(lo, split.end - split.start)
-    yield from _project_pandas(tbl, split.topic).to_batches()
+    yield from _project(tbl, split.topic).to_batches()
 
 
 class KafquackBatchReader(DataSourceReader):
@@ -292,7 +297,7 @@ class KafquackBatchReader(DataSourceReader):
         self.options = options
         self.fixture_dir = options.get("fixture_dir")
         self.topic_label = options.get("topic_name") or options.get("topic", "events")
-        self.min_splits = int(options.get("num_partitions", "4"))
+        self.n_splits = int(options.get("num_partitions", "4"))
         if self.fixture_dir is None:
             # reference parity: bind fails eagerly when the broker is down
             # (cpp:112-129) — and this container has no Python Kafka client
@@ -308,86 +313,23 @@ class KafquackBatchReader(DataSourceReader):
 
     def partitions(self) -> list[InputPartition]:
         return _plan_replay_splits(
-            _events_path(self.fixture_dir), self.topic_label, self.min_splits
+            _events_path(self.fixture_dir), self.topic_label, self.n_splits
         )
 
     def read(self, partition: _ReplaySplit) -> Iterator["pa.RecordBatch"]:
         return _read_replay_split(partition)
 
 
-class KafquackSimpleStreamReader(SimpleDataSourceStreamReader):
-    """Unbounded replay: offsets are row indices into the fixture in
-    ``offset`` (event_id) order — deterministic across restarts, so
-    ``readBetweenOffsets`` re-reads any micro-batch exactly (the
-    replayability the reference's synchronous per-message commit cannot
-    give; SURVEY §3.4 divergence).
-
-    Driver-side by design (SimpleDataSourceStreamReader contract — the
-    documented small-rate path).  High-rate production topics use the
-    JVM Kafka source via :func:`..sources.kafka.kafka_consumer`.
-    """
-
-    def __init__(self, options: dict[str, str]):
-        self.options = options
-        fixture_dir = options.get("fixture_dir")
-        if fixture_dir is None:
-            raise NotImplementedError(
-                "kafquack streaming requires fixture_dir replay in this "
-                "environment; use kafka_consumer(spark, ..., mode='stream') "
-                "for real brokers."
-            )
-        self.path = _events_path(fixture_dir)
-        self.topic_label = options.get("topic_name") or options.get("topic", "events")
-        self.batch_rows = int(options.get("max_offsets_per_trigger", "0")) or None
-        self._table = None  # lazy; loaded once per driver process
-
-    def _load(self) -> "pa.Table":
-        if self._table is None:
-            import pyarrow.parquet as pq
-
-            raw = pq.read_table(self.path, columns=["event_id", "ts", "user_id", "props"])
-            projected = _project_pandas(raw, self.topic_label)
-            self._table = projected.take(
-                projected["offset"].to_pandas().argsort().to_numpy()
-            )
-        return self._table
-
-    def initialOffset(self) -> dict:
-        return {"index": 0}
-
-    def read(self, start: dict) -> tuple[Iterator[tuple], dict]:
-        tbl = self._load()
-        lo = start["index"]
-        hi = len(tbl) if self.batch_rows is None else min(len(tbl), lo + self.batch_rows)
-        # an ITERATOR (the prefetch cache next()s an empty batch at the
-        # topic's end) over a LIST, not a generator: the cache copy.copy()s
-        # it to serve replanning (datasource_internal.getCache), and a
-        # list iterator copies with its position
-        return iter(self._rows(lo, hi)), {"index": hi}
-
-    def readBetweenOffsets(self, start: dict, end: dict) -> list[tuple]:
-        return self._rows(start["index"], end["index"])
-
-    def _rows(self, lo: int, hi: int) -> list[tuple]:
-        tbl = self._load().slice(lo, hi - lo)
-        return list(zip(*(col.to_pylist() for col in tbl.columns)))
-
-    def commit(self, end: dict) -> None:  # progress is the checkpoint's job
-        pass
-
-
 class KafquackStreamReader(DataSourceStreamReader):
     """Partition-parallel unbounded replay (round 6; closes VERDICT r5
     item 1): the full ``DataSourceStreamReader`` contract, so every
-    micro-batch fans out to executor tasks instead of funneling through
-    the driver like the Simple reader.
+    micro-batch is read by executor tasks instead of funneling through
+    the driver.
 
     * Offsets are FILE-ORDER row indices into the fixture — deterministic
       for a fixed file, so any [start, end) micro-batch replays exactly
-      across restarts.  (The Simple reader orders by ``offset``/event_id
-      instead; both are deterministic replay orders, and every consumer
-      aggregates, so the choice is unobservable downstream — file order
-      is what lets a task map straight onto row-group spans.)
+      across restarts.  (File order, not ``offset``/event_id order, is
+      what lets a task map straight onto row-group spans.)
     * Driver-side work per micro-batch is FOOTER METADATA ONLY: the total
       row count bounds ``latestOffset`` and ``partitions(start, end)``
       slices the range with :func:`_range_splits` — the same split math
@@ -430,7 +372,7 @@ class KafquackStreamReader(DataSourceStreamReader):
         self.path = _events_path(fixture_dir)
         self.topic_label = options.get("topic_name") or options.get("topic", "events")
         self.batch_rows = int(options.get("max_offsets_per_trigger", "0")) or None
-        self.min_splits = int(options.get("num_partitions", "4"))
+        self.n_splits = int(options.get("num_partitions", "4"))
         self._starts: list[int] | None = None  # footer metadata, read once
         start_offset = options.get("start_offset")
         self._pos: int | None = (
@@ -470,7 +412,7 @@ class KafquackStreamReader(DataSourceStreamReader):
             self.topic_label,
             start["index"],
             end["index"],
-            self.min_splits,
+            self.n_splits,
             self._rg_index(),
         )
 
@@ -501,19 +443,7 @@ class KafquackDataSource(DataSource):
         return KafquackBatchReader(self.options)
 
     def streamReader(self, schema: StructType) -> KafquackStreamReader:
-        """The partition-parallel default.  ``simple_stream_reader=true``
-        opts back into the driver-side Simple reader: raising the API's
-        NOT_IMPLEMENTED marker makes Spark's ``_streamReader`` dispatch
-        fall through to :meth:`simpleStreamReader`."""
-        if self.options.get("simple_stream_reader", "").lower() == "true":
-            raise PySparkNotImplementedError(
-                errorClass="NOT_IMPLEMENTED",
-                messageParameters={"feature": "streamReader"},
-            )
         return KafquackStreamReader(self.options)
-
-    def simpleStreamReader(self, schema: StructType) -> KafquackSimpleStreamReader:
-        return KafquackSimpleStreamReader(self.options)
 
 
 def register_datasource(spark) -> None:
@@ -577,7 +507,6 @@ __all__ = [
     "KafquackDataSource",
     "KafquackBatchReader",
     "KafquackStreamReader",
-    "KafquackSimpleStreamReader",
     "register_datasource",
     "read_kafquack",
     "create_sql_view",

@@ -356,6 +356,25 @@ def test_compile_past_the_timeout_publishes_nothing(cache, home, monkeypatch):
     assert _launch_home(monkeypatch) == (str(home), str(home))
 
 
+def test_exit_builds_share_one_deadline(cache, home, monkeypatch):
+    """The exit hook's JVM wait and both builds share one BUILD_TIMEOUT_S:
+    a compile that runs to the deadline leaves the archive no time, so the
+    exit ends within the budget instead of paying a second timeout."""
+    monkeypatch.setattr(cds, "compile_command", lambda trees: [sys.executable, "-c", "import time; time.sleep(60)"])
+    monkeypatch.setattr(cds, "BUILD_TIMEOUT_S", 2)
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    overlay, archive = cds.overlay_plan(), _recording(cds.plan(), monkeypatch, sleep_s=0)
+    timeouts = []
+    run = cds._run_bounded
+    monkeypatch.setattr(cds, "_run_bounded", lambda cmd, timeout: run(cmd, timeouts.append(timeout) or timeout))
+    t = time.perf_counter()
+    cds._build_at_exit([overlay, archive], os.getpid())
+    assert time.perf_counter() - t < cds.BUILD_TIMEOUT_S + 5
+    assert len(timeouts) == 1 and timeouts[0] <= cds.BUILD_TIMEOUT_S  # the dump never ran
+    assert not overlay.complete() and not archive.complete()
+    assert not os.path.exists(archive.classlist)
+
+
 def test_overlay_stops_building_after_repeated_failures(cache, home, monkeypatch):
     """A host whose compile always runs past the timeout pays for it
     MAX_FAILED_BUILDS times under one key, not at every exit."""
@@ -428,6 +447,26 @@ def test_socket_dir_falls_back_when_its_paths_would_not_fit(tmp_path, monkeypatc
     monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path / "short"))
     assert cds.socket_dir() is None
     assert not os.path.exists(tmp_path / "short")
+
+
+@pytest.mark.parametrize("length", [60, 61])
+def test_socket_dir_respects_sparks_length_limit(length, monkeypatch):
+    """Spark 4.1 takes a socket dir of at most 60 characters; a longer one,
+    which it would reject at the first Python job, falls back to TCP."""
+    base = tempfile.mkdtemp()
+    # <base>/<pad>/kafquack-spark/uds-<pid>-<8 random characters>
+    pad = length - len(f"{base}//kafquack-spark/{cds.SOCKETS}{os.getpid()}-12345678")
+    assert pad > 0
+    monkeypatch.setenv("XDG_CACHE_HOME", os.path.join(base, "x" * pad))
+    monkeypatch.setattr(SparkContext, "_gateway", None)
+    try:
+        path = cds.socket_dir()
+        if length <= 60:
+            assert path is not None and len(path) == length
+        else:
+            assert path is None
+    finally:
+        shutil.rmtree(base)
 
 
 def test_archive_classpath_names_the_real_home(tmp_path):

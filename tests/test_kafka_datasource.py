@@ -16,9 +16,12 @@ import time
 import pytest
 
 from duckdb_extension_kafquack_spark.sources.datasource import (
+    MIN_SPLIT_ROWS,
     KafquackDataSource,
     _bind_options,
     _plan_replay_splits,
+    _range_splits,
+    _rg_starts,
     read_kafquack,
     register_datasource,
 )
@@ -28,6 +31,10 @@ from duckdb_extension_kafquack_spark.sources.synthetic import (
 from tests.conftest import SF_DIR
 
 EVENTS = f"{SF_DIR}/events.parquet"
+# 10,000 messages in one row group: enough rows for the scan to fan out
+# (SF_DIR's 1,000 are one split of at least MIN_SPLIT_ROWS)
+FANOUT_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+FANOUT_EVENTS = f"{FANOUT_DIR}/events.parquet"
 
 
 class TestBind:
@@ -85,7 +92,7 @@ class TestBind:
 
 class TestSplitPlanning:
     def test_single_group_fixture_fans_out(self):
-        splits = _plan_replay_splits(EVENTS, "events", 4)
+        splits = _plan_replay_splits(FANOUT_EVENTS, "events", 4)
         assert len(splits) == 4
         # contiguous, disjoint, covering
         assert splits[0].start == 0
@@ -101,9 +108,24 @@ class TestSplitPlanning:
         assert all(s.end > s.start for s in splits)
 
     def test_row_group_spans_cover_ranges(self):
-        for s in _plan_replay_splits(EVENTS, "events", 8):
+        for s in _plan_replay_splits(FANOUT_EVENTS, "events", 8):
             assert s.rg_offset <= s.start
             assert s.rg_end >= s.rg_start + 1
+
+    def test_small_trigger_in_one_group_is_one_split(self):
+        """A 1,000-row trigger inside the fixture's one row group plans one
+        task, which reads that group once, whatever ``num_partitions``."""
+        splits = _range_splits(FANOUT_EVENTS, "events", 2000, 3000, 4, _rg_starts(FANOUT_EVENTS))
+        assert [(s.start, s.end, s.rg_start, s.rg_end) for s in splits] == [(2000, 3000, 0, 1)]
+
+    @pytest.mark.parametrize("k", [1, 2, 3, 4, 5, 8])
+    def test_split_count_follows_the_row_floor(self, k):
+        """k × MIN_SPLIT_ROWS rows plan min(k, num_partitions) splits, each
+        of at least MIN_SPLIT_ROWS rows."""
+        starts = [0, 10 * MIN_SPLIT_ROWS]
+        splits = _range_splits("p", "t", 0, k * MIN_SPLIT_ROWS, 4, starts)
+        assert len(splits) == min(k, 4)
+        assert all(s.end - s.start >= MIN_SPLIT_ROWS for s in splits)
 
 
 class TestBatchRead:
@@ -122,9 +144,31 @@ class TestBatchRead:
         assert ds.exceptAll(ref).count() == 0
         assert ref.exceptAll(ds).count() == 0
 
+    def test_projection_of_a_slice_matches_the_oracle_in_both_ts_layouts(self):
+        """The per-task Arrow kernel on a task's row-group slice (offset >
+        0) equals DuckDB's oracle projection, for timestamp[us] and for
+        int64-nanosecond ``ts``."""
+        import duckdb
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from duckdb_extension_kafquack_spark.sources.datasource import _project
+        from duckdb_extension_kafquack_spark.suite import _KAFKA_ORACLE
+
+        events = pq.read_table(FANOUT_EVENTS).slice(4321, 1000)
+        con = duckdb.connect()
+        con.register("events", events)
+        want = con.sql(_KAFKA_ORACLE).arrow().sort_by("offset")
+        con.close()
+        as_ns = events["ts"].cast(pa.timestamp("ns")).cast(pa.int64())
+        for layout in (events, events.set_column(1, "ts", as_ns)):
+            got = _project(layout, "events")
+            got.validate(full=True)
+            assert got.sort_by("offset").equals(want)
+
     def test_scan_is_partitioned(self, spark):
         ds = read_kafquack(
-            spark, "localhost:9092", "events", "g", fixture_dir=SF_DIR
+            spark, "localhost:9092", "events", "g", fixture_dir=FANOUT_DIR
         )
         assert ds.rdd.getNumPartitions() == 4
 
@@ -134,7 +178,7 @@ class TestBatchRead:
             "localhost:9092",
             "events",
             "g",
-            fixture_dir=SF_DIR,
+            fixture_dir=FANOUT_DIR,
             num_partitions=8,
         )
         assert ds.rdd.getNumPartitions() == 8
@@ -190,76 +234,6 @@ class TestStreamRead:
         assert got.exceptAll(ref).count() == 0
         assert ref.exceptAll(got).count() == 0
 
-    def test_simple_reader_drains_past_the_end(self, spark):
-        """The simple_stream_reader=true opt-in through Spark.  The trigger
-        after the topic's end reads an empty batch with end == start, which
-        Spark's prefetch cache next()s; processAllAvailable waits for that
-        trigger, so the stream must survive it and hold every offset
-        exactly once."""
-        stream = read_kafquack(
-            spark,
-            "localhost:9092",
-            "events",
-            "g",
-            stream=True,
-            fixture_dir=SF_DIR,
-            max_offsets_per_trigger=400,
-            simple_stream_reader="true",
-        )
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("kafquack_simple_t1")
-            .trigger(processingTime="100 milliseconds")
-            .option("checkpointLocation", tempfile.mkdtemp())
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            assert q.isActive and q.exception() is None
-        finally:
-            q.stop()
-        got = spark.table("kafquack_simple_t1")
-        ref = kafka_messages_from_events(spark, SF_DIR)
-        assert got.count() == ref.count()
-        assert got.exceptAll(ref).count() == 0
-        assert ref.exceptAll(got).count() == 0
-
-    def test_micro_batches_bounded_by_max_offsets(self, spark):
-        from duckdb_extension_kafquack_spark.sources.datasource import (
-            KafquackSimpleStreamReader,
-        )
-
-        r = KafquackSimpleStreamReader(
-            {
-                "fixture_dir": SF_DIR,
-                "topic": "events",
-                "max_offsets_per_trigger": "300",
-            }
-        )
-        rows, end = r.read(r.initialOffset())
-        rows = list(rows)
-        assert len(rows) == 300
-        assert end == {"index": 300}
-        # deterministic re-read of the same batch (restart recovery)
-        again = r.readBetweenOffsets({"index": 0}, {"index": 300})
-        assert rows == again
-        # offsets are served in order
-        offsets = [row[2] for row in rows]
-        assert offsets == sorted(offsets)
-
-    def test_stream_offsets_progress_to_end(self):
-        from duckdb_extension_kafquack_spark.sources.datasource import (
-            KafquackSimpleStreamReader,
-        )
-
-        r = KafquackSimpleStreamReader(
-            {"fixture_dir": SF_DIR, "topic": "events"}
-        )
-        rows, end = r.read(r.initialOffset())
-        assert end["index"] == len(list(rows))
-        rows2, end2 = r.read(end)
-        assert list(rows2) == [] and end2 == end
-
 
 class TestParallelStreamReader:
     """The full DataSourceStreamReader (round 6): micro-batches planned
@@ -275,7 +249,7 @@ class TestParallelStreamReader:
     def test_micro_batch_fans_out_to_multiple_partitions(self):
         """VERDICT r5 item 1's done-condition: >1 input partition per
         micro-batch, planned with the batch reader's split math."""
-        r = self._reader()
+        r = self._reader(fixture_dir=FANOUT_DIR)
         start, end = r.initialOffset(), r.latestOffset()
         parts = r.partitions(start, end)
         assert len(parts) > 1
@@ -318,6 +292,70 @@ class TestParallelStreamReader:
         r2 = self._reader(max_offsets_per_trigger="300")
         total = r2._rg_index()[-1]
         assert r2.latestOffset() == {"index": total}
+
+    def test_batch_rereads_deterministically(self):
+        """A batch re-planned by a restarted reader reads the same rows,
+        bounded by max_offsets_per_trigger: the restart recovery the
+        checkpoint's offset log relies on."""
+        import pyarrow as pa
+
+        from duckdb_extension_kafquack_spark.sources.datasource import (
+            _read_replay_split,
+        )
+
+        def rows(r, start, end):
+            return pa.Table.from_batches(
+                [b for p in r.partitions(start, end) for b in _read_replay_split(p)]
+            )
+
+        r = self._reader(max_offsets_per_trigger="300", start_offset="0")
+        start, end = r.initialOffset(), r.latestOffset()
+        assert end == {"index": 300}
+        first = rows(r, start, end)
+        assert len(first) == 300
+        assert first.equals(rows(self._reader(), start, end))
+
+    def test_offsets_progress_to_end(self):
+        """Unpaced, one batch reaches the topic's end; after it the end
+        offset stays put and plans nothing."""
+        r = self._reader(start_offset="0")
+        start, end = r.initialOffset(), r.latestOffset()
+        assert end["index"] == r._rg_index()[-1]
+        assert sum(p.end - p.start for p in r.partitions(start, end)) == end["index"]
+        assert r.latestOffset() == end
+        assert r.partitions(end, end) == []
+
+    def test_drains_past_the_end(self, spark):
+        """The trigger after the topic's end plans no batch;
+        processAllAvailable waits for it, so the stream must survive it
+        and hold every offset exactly once."""
+        stream = read_kafquack(
+            spark,
+            "localhost:9092",
+            "events",
+            "g",
+            stream=True,
+            fixture_dir=SF_DIR,
+            max_offsets_per_trigger=400,
+            start_offset=0,
+        )
+        q = (
+            stream.writeStream.format("memory")
+            .queryName("kafquack_past_end_t1")
+            .trigger(processingTime="100 milliseconds")
+            .option("checkpointLocation", tempfile.mkdtemp())
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+            assert q.isActive and q.exception() is None
+        finally:
+            q.stop()
+        got = spark.table("kafquack_past_end_t1")
+        ref = kafka_messages_from_events(spark, SF_DIR)
+        assert got.count() == ref.count()
+        assert got.exceptAll(ref).count() == 0
+        assert ref.exceptAll(got).count() == 0
 
     def test_empty_range_plans_no_partitions(self):
         r = self._reader()
@@ -535,25 +573,6 @@ class TestParallelStreamReader:
             spark, tmp_path, self.STATEFUL_COPIES + [(97, 690)]
         )
         assert got == want
-
-    def test_simple_reader_optin_falls_back(self):
-        """simple_stream_reader=true raises the API's NOT_IMPLEMENTED
-        marker from streamReader, which is exactly what makes Spark's
-        _streamReader dispatch use simpleStreamReader instead."""
-        from pyspark.errors import PySparkNotImplementedError
-
-        ds = KafquackDataSource(
-            {
-                "brokers": "b",
-                "topic": "t",
-                "group_id": "g",
-                "fixture_dir": SF_DIR,
-                "simple_stream_reader": "true",
-            }
-        )
-        with pytest.raises(PySparkNotImplementedError):
-            ds.streamReader(schema=None)
-        assert ds.simpleStreamReader(schema=None) is not None
 
 
 class TestSqlRoute:

@@ -708,11 +708,13 @@ FAST = settings(max_examples=200, deadline=None)
     lo_frac=st.floats(min_value=0.0, max_value=1.0),
     hi_frac=st.floats(min_value=0.0, max_value=1.0),
     n_splits=st.integers(min_value=1, max_value=8),
+    min_rows=st.integers(min_value=1, max_value=100),
 )
-def test_range_splits_cover_exactly(rg_sizes, lo_frac, hi_frac, n_splits):
+def test_range_splits_cover_exactly(rg_sizes, lo_frac, hi_frac, n_splits, min_rows):
     """The stream/batch split math (`_range_splits`): for ANY row-group
-    layout and ANY [lo, hi) offset range, the planned splits are
-    disjoint, ordered, cover the clamped range exactly, and each
+    layout, ANY [lo, hi) offset range and ANY row floor, the planned
+    splits are disjoint, ordered, cover the clamped range exactly, each
+    holds at least the floor's rows unless it is the only one, and each
     split's row-group span contains its index range — no row can be
     read twice or dropped by a micro-batch.  Pure math, no Spark."""
     from duckdb_extension_kafquack_spark.sources.datasource import _range_splits
@@ -723,7 +725,7 @@ def test_range_splits_cover_exactly(rg_sizes, lo_frac, hi_frac, n_splits):
     total = starts[-1]
     lo = int(lo_frac * total)
     hi = int(hi_frac * total)
-    splits = _range_splits("p", "t", lo, hi, n_splits, starts)
+    splits = _range_splits("p", "t", lo, hi, n_splits, starts, min_rows)
     clo, chi = max(0, lo), min(hi, total)
     if chi <= clo:
         assert splits == []
@@ -733,6 +735,7 @@ def test_range_splits_cover_exactly(rg_sizes, lo_frac, hi_frac, n_splits):
     assert bounds[0][0] == clo and bounds[-1][1] == chi
     assert all(a[1] == b[0] for a, b in zip(bounds, bounds[1:]))
     assert len(splits) <= n_splits
+    assert len(splits) == 1 or all(s.end - s.start >= min_rows for s in splits)
     for s in splits:
         # the row-group span covers the index range; offsets consistent
         assert starts[s.rg_start] <= s.start
